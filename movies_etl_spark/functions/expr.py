@@ -489,8 +489,12 @@ def cast_bool_eq(c: Column, truthy: str = "True") -> Column:
 
 def fill_if_zero(keep: Column, fallback: Column) -> Column:
     """F15: column-pair precedence — keep the kaggle value unless it is 0,
-    then take the wiki value (challenge.py:240-246). ``keep == 0`` is false
-    for null keep → null stays null, matching pandas."""
+    then take the wiki value (challenge.py:240-246). ``keep`` may be the
+    kaggle CSV's decimal text ("81.0"), which ANSI refuses to cast to an
+    integral type, so both the zero test and the kept value read it as a
+    double, as pandas does ("0.0" is zero). ``keep == 0`` is false for
+    null keep → null stays null, matching pandas."""
+    keep = keep.try_cast("double")
     return F.when(keep == 0, fallback).otherwise(keep)
 
 

@@ -749,14 +749,13 @@ def lsh_dedup_batch(
 
     sh_b = D.shingled(batch_df, "text", "doc_id").cache()
     bands_b = D.with_minhash_bands(sh_b, "doc_id").cache()
-    # Index writes FIRST (r19): the per-batch job profile
-    # (tools/profile_lsh_jobs.py) showed the survivor plan's broadcast
-    # builds (touched/bnew/vb/cand) launching CONCURRENTLY on the
-    # broadcast-exchange thread pool and RACING to materialize the
-    # still-cold sh_b/bands_b caches — 4-5 near-identical 1-task jobs
-    # each re-running the full shingle+band compute. Writing the
-    # batch's bands/shingles index dirs up front materializes both
-    # caches through actions the batch must pay anyway, so every
+    # Index writes FIRST (r19): a per-batch job profile showed the
+    # survivor plan's broadcast builds (touched/bnew/vb/cand) launching
+    # CONCURRENTLY on the broadcast-exchange thread pool and RACING to
+    # materialize the still-cold sh_b/bands_b caches — 4-5
+    # near-identical 1-task jobs each re-running the full shingle+band
+    # compute. Writing the batch's bands/shingles index dirs up front
+    # materializes both caches through actions the batch must pay anyway, so every
     # broadcast build afterwards is a cache read. Write order within
     # the batch is free to choose: a retried batch never reads its own
     # writes (_lsh_batches_below is strictly-below) and every write

@@ -1,0 +1,24 @@
+"""bench.run_suite's per-query layer record, at the test SF: one
+tracing span per query, counters from perfbench/tracing.py."""
+
+from __future__ import annotations
+
+import bench
+from perfbench import tracing
+
+
+def test_suite_records_layer_counters_per_query(spark, sf_dir):
+    names = ["groupby_count", "streaming_dedup"]
+    wall, layers = bench.run_suite(spark, names, sf_dir)
+    assert list(layers) == names
+    assert wall >= sum(rec["s"] for rec in layers.values())
+    counter_keys = set(tracing.exec_counters(spark, 0, 0))
+    for name, rec in layers.items():
+        assert {"build_s", "exec_s"} | counter_keys <= set(rec), name
+        assert rec["jobs"] > 0 and rec["cpu_ms"] > 0, name
+    batch, stream = layers["groupby_count"], layers["streaming_dedup"]
+    # each query owns its own job-id range
+    assert batch["job_hi"] <= stream["job_lo"]
+    assert batch["jobs"] == batch["job_hi"] - batch["job_lo"]
+    assert stream["batches"] > 0
+    assert "batches" not in batch

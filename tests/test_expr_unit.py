@@ -421,3 +421,16 @@ def test_pruned_spec_column_recorded_in_stats(spark):
     assert stats["mostly_null"]["dropped_by_null_prune"] == 1
     assert stats["mostly_null"]["n_input"] == 1  # tallies kept, not lost
     assert "dropped_by_null_prune" not in stats["good"]
+
+
+def test_fill_if_zero_on_decimal_text(spark):
+    """F15 on the kaggle CSV's decimal text (movies_metadata.csv holds
+    runtime/revenue as "81.0"): the zero test must not raise under ANSI,
+    "0.0" and "0" count as zero, null stays null."""
+    df = spark.createDataFrame(
+        [("81.0", 102), ("0.0", 95), ("0", 90), (None, 1), ("373554033.0", 5)],
+        "keep string, fallback int",
+    )
+    out = df.select(E.fill_if_zero(F.col("keep"), F.col("fallback")).alias("v"))
+    assert out.schema["v"].dataType.simpleString() == "double"
+    assert [r.v for r in out.collect()] == [81.0, 95.0, 90.0, None, 373554033.0]

@@ -116,3 +116,19 @@ def test_ratings_output(outputs):
     import datetime
 
     assert ts[1] == datetime.datetime(2001, 9, 9, 1, 46, 40)  # epoch 1e9 UTC
+
+
+def test_merge_movies_fills_from_decimal_text(spark):
+    """F15 through merge_movies when kaggle runtime/revenue arrive as the
+    real CSV's decimal text ("81.0", "0.0"), not as integer text."""
+    wiki = spark.createDataFrame(
+        [("tt1", 102.0, 9.0e6), ("tt2", 95.0, 7.0e6)],
+        "imdb_id string, running_time double, box_office double",
+    )
+    kaggle = spark.createDataFrame(
+        [("tt1", "81.0", "0.0"), ("tt2", "0.0", "373554033.0")],
+        "imdb_id string, runtime string, revenue string",
+    )
+    rows = {r["imdb_id"]: r for r in pipeline.merge_movies(wiki, kaggle).collect()}
+    assert (rows["tt1"]["runtime"], rows["tt1"]["revenue"]) == (81.0, 9.0e6)
+    assert (rows["tt2"]["runtime"], rows["tt2"]["revenue"]) == (95.0, 373554033.0)

@@ -5,8 +5,8 @@ VERDICT r11 #1: 71 eager builder jobs ~= 96% of the query's bench wall.
 This instrument wraps the composite's eager boundaries (the two
 localCheckpoints, the persists, and each BPE argmax collect) and prints
 the Spark-job count each one contributes, so the cut can target the
-real spenders instead of guessing. Uses the core AppStatusStore job-id
-diff from survey_build_exec.py (sees all job groups).
+real spenders instead of guessing. Counts jobs by diffing the core
+AppStatusStore's job ids (sees all job groups).
 
 Usage: python tools/profile_llm_corpus.py [sf_dir]
 """
