@@ -290,7 +290,9 @@ def _ann_recall(spark, sf_dir: str) -> dict[str, float]:
         # the r9 frontier-selected isotropic operating point
         # (planes=8, radius=3: ≥0.6@5 at a ~37% scan budget)
         "lsh_multiprobe_8p_r3": SIM.recall_at_k(
-            exact, SIM.topk_multiprobe_lsh_param(emb, qset, 8, 3, k=5)
+            exact, SIM.topk_multiprobe_lsh(
+                emb, qset, k=5, offsets=SIM.multiprobe_offsets(8, 3)
+            )
         ),
         "ivf_nprobe1": SIM.recall_at_k(exact, SIM.topk_ivf(emb, qset, k=5)),
         "ivf_nprobe3": SIM.recall_at_k(

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from movies_etl_spark.operators.text import token_hash  # noqa: F401 (shingle_hash_array)
+from movies_etl_spark.operators.text import token_hash
 
 # MinHash configuration: 8 hashes, 4 bands × 2 rows.
 N_MINHASH = 8
@@ -66,48 +66,6 @@ MINHASH_SEEDS: list[tuple[int, int]] = [
 ]
 
 
-def token_shingles(toks: Column, k: int = 3) -> Column:
-    """k-token shingles ("a b c" for consecutive triples). Empty array if
-    fewer than k tokens."""
-    n = F.size(toks)
-    starts = F.sequence(F.lit(0), n - k)  # 0-based start indices
-    mk = lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
-    )
-    return F.when(n >= k, F.transform(starts, mk)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _affine(a: int, b: int):
-    """Single-arg lambda factory. NB: do NOT write ``lambda h, a=a: ...``
-    with pyspark higher-order functions — they count DEFAULTED params and
-    would call the lambda as (element, index), silently binding the
-    constant to the index Column."""
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def minhash_signature(shingles: Column, n_hashes: int = N_MINHASH) -> list[Column]:
-    """MinHash signature via a universal hash family over INTEGER shingle
-    hashes (see shingle_hash_array): per seed i, min over shingles of
-    (a_i·h + b_i) mod P. Engine-portable — the SQL oracle reproduces the
-    identical arithmetic on the identical md5-based token hashes."""
-    return [
-        F.array_min(F.transform(shingles, _affine(a, b)))
-        for a, b in MINHASH_SEEDS[:n_hashes]
-    ]
-
-
-def band_keys(sig: list[Column], n_bands: int = N_BANDS) -> list[Column]:
-    """LSH band keys: concat of each signature slice. Docs sharing ANY
-    band key become candidate pairs (bucket join, never n²)."""
-    r = len(sig) // n_bands
-    return [
-        F.concat_ws("|", *[c.cast("string") for c in sig[b * r : (b + 1) * r]])
-        for b in range(n_bands)
-    ]
-
-
 #: shingle-combination constants (primes): h(s_i..s_i+2) =
 #: (th_i·C1 + th_i+1·C2 + th_i+2) mod P.  th < 2^31, C2 < 2^17 → products
 #: < 2^48, sums < 2^49: exact in 64-bit on any engine.
@@ -115,27 +73,29 @@ SHINGLE_C1 = 7_919
 SHINGLE_C2 = 104_729
 
 
-def shingle_hash_array(toks: Column, k: int = 3) -> Column:
-    """Integer shingle hashes: md5 ONCE PER TOKEN (not per shingle), then
-    each k-shingle hash is an arithmetic combination of consecutive token
-    hashes. Eliminates both shingle-string construction and per-shingle
-    md5 — the dominant costs of text near-dedup at corpus scale. 31-bit
-    space; within-document-pair collisions (~10^-5) are shared exactly by
-    any engine replicating the arithmetic."""
-    th = F.transform(toks, lambda t: token_hash(t) % F.lit(MINHASH_P))
-    n = F.size(toks)
-    # Sliding window via zip_with over shifted slices — NOT element_at
-    # inside a per-element lambda: Catalyst inlines the md5-transform
-    # array into every element access, turning O(n) hashing into O(n²).
-    # zip_with evaluates each array operand once per ROW (3 evals total);
-    # its null padding at the tail is sliced off.
-    shifted1 = F.slice(th, 2, n)
-    shifted2 = F.slice(th, 3, n)
-    s1 = F.zip_with(th, shifted1, lambda x, y: x * SHINGLE_C1 + y * SHINGLE_C2)
-    s2 = F.zip_with(s1, shifted2, lambda x, y: (x + y) % MINHASH_P)
-    return F.when(n >= k, F.slice(s2, 1, n - (k - 1))).otherwise(
-        F.array().cast("array<bigint>")
-    )
+# ---------------------------------------------------------------------------
+# Kernels as single-parse SQL text. Every kernel below has ONE definition:
+# a SQL text builder over SQL fragments, turned into a Column by ONE
+# F.expr parse. Python-HOF construction (F.transform/F.aggregate with
+# python lambdas) builds the same expression tree through ~30-60 py4j
+# round trips per fold; the ANN sweeps build dozens of folds per query
+# and the streaming LSH path re-bands every micro-batch, so that chatter
+# was ~1 s of driver time per build (r19 build-cost measurements).
+# Caller-supplied column names reach the text only through sql_ident.
+
+
+def sql_ident(name: str) -> str:
+    """A column NAME as a backtick-quoted SQL identifier — the one way a
+    caller-supplied column reaches the parsed kernel text in this module
+    and in similarity.py. The name is taken literally: ``a.b`` is the
+    column named "a.b" (not field b of struct a) and ``select`` is a
+    column, not a keyword; embedded backticks are doubled. Anything that
+    is not a str raises TypeError."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"expected a column name (str), got {type(name).__name__}"
+        )
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _token_hash_sql(tok: str) -> str:
@@ -145,14 +105,16 @@ def _token_hash_sql(tok: str) -> str:
 
 def _shingle_hash_array_sql(toks: str, k: int = 3) -> str:
     """SQL text of :func:`shingle_hash_array` over a token-array
-    fragment — the identical expression tree (the repeated ``th``/``n``
-    subtrees below are textual duplicates, exactly as reusing the same
-    Column object inserts the same subtree by value), in ONE parse.
-    Construction of the python-HOF version cost ~0.13 s of py4j round
-    trips per call — paid once per micro-batch in the streaming LSH
-    path and once per minhash query (r19, guide §1.2 build cost)."""
+    fragment. The repeated ``th``/``n`` subtrees are textual duplicates,
+    exactly as reusing one Column object inserts the same subtree by
+    value."""
     th = f"transform({toks}, t -> {_token_hash_sql('t')} % {MINHASH_P})"
     n = f"size({toks})"
+    # Sliding window via zip_with over shifted slices — NOT element_at
+    # inside a per-element lambda: Catalyst inlines the md5-transform
+    # array into every element access, turning O(n) hashing into O(n²).
+    # zip_with evaluates each array operand once per ROW (3 evals total);
+    # its null padding at the tail is sliced off.
     s1 = (
         f"zip_with({th}, slice({th}, 2, {n}), "
         f"(x, y) -> x * {SHINGLE_C1} + y * {SHINGLE_C2})"
@@ -164,18 +126,41 @@ def _shingle_hash_array_sql(toks: str, k: int = 3) -> str:
     )
 
 
+def shingle_hash_array(text_col: str) -> Column:
+    """Integer 3-shingle hashes of the whitespace tokens of column
+    ``text_col``: md5 ONCE PER TOKEN (not per shingle), then each
+    shingle hash is an arithmetic combination of consecutive token
+    hashes. Eliminates both shingle-string construction and per-shingle
+    md5 — the dominant costs of text near-dedup at corpus scale. 31-bit
+    space; within-document-pair collisions (~10^-5) are shared exactly by
+    any engine replicating the arithmetic. Empty array under 3 tokens."""
+    return F.expr(_shingle_hash_array_sql(f"split({sql_ident(text_col)}, ' ')"))
+
+
+def _minhash_sig_sql(shingles: str) -> list[str]:
+    """SQL text of the MinHash signature over a shingle-array fragment:
+    per seed i, min over shingles of (a_i·h + b_i) mod P (the universal
+    hash family above; every seed < 2^31, so the literals are ints)."""
+    return [
+        f"array_min(transform({shingles}, h -> ({a} * h + {b}) % {MINHASH_P}))"
+        for a, b in MINHASH_SEEDS[:N_MINHASH]
+    ]
+
+
+def minhash_signature(shingles_col: str) -> list[Column]:
+    """MinHash signature (N_MINHASH columns) of the integer shingle-hash
+    array in column ``shingles_col`` (see shingle_hash_array).
+    Engine-portable — the SQL oracle reproduces the identical arithmetic
+    on the identical md5-based token hashes."""
+    return [F.expr(s) for s in _minhash_sig_sql(sql_ident(shingles_col))]
+
+
 def shingled(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, shingles) projection (integer shingle hashes) — compute ONCE
     and persist when several downstream branches (banding + verification)
-    reuse it; at 100 TB this is a checkpointed table, not a recompute.
-    Built as one parsed expression since r19 (see
-    :func:`_shingle_hash_array_sql`); value parity with the Column
-    builders is pinned in test_shingle_band_sql_parity."""
+    reuse it; at 100 TB this is a checkpointed table, not a recompute."""
     return df.select(
-        F.col(id_col),
-        F.expr(_shingle_hash_array_sql(f"split({text_col}, ' ')")).alias(
-            "shingles"
-        ),
+        F.col(id_col), shingle_hash_array(text_col).alias("shingles")
     )
 
 
@@ -190,20 +175,12 @@ def with_minhash_bands(
     signature for their own output (minhash_jaccard_estimate persists
     it once and reads it three times) pass the column names; the
     default ``None`` recomputes exactly as before — band keys are the
-    same concat arithmetic either way."""
-    # band-array column in ONE parse (r19): the python path built 8
-    # affine-min folds + 4 concat_ws + the struct array through ~0.2 s
-    # of py4j calls per invocation (once per streaming micro-batch);
-    # the SQL text is the identical tree — same affine grouping
-    # (a*h + b) % P, same int literals (every seed < 2^31), same
-    # casts. Parity pinned in test_shingle_band_sql_parity.
+    same concat arithmetic either way. The whole band array is one
+    parsed expression (see the kernel note above)."""
     if sig_cols is not None:
-        sig_sql = list(sig_cols)
+        sig_sql = [sql_ident(c) for c in sig_cols]
     else:
-        sig_sql = [
-            f"array_min(transform(shingles, h -> ({a} * h + {b}) % {MINHASH_P}))"
-            for a, b in MINHASH_SEEDS[:N_MINHASH]
-        ]
+        sig_sql = _minhash_sig_sql(sql_ident("shingles"))
     r = len(sig_sql) // N_BANDS
     band_sql = [
         "concat_ws('|', "
@@ -250,8 +227,10 @@ def jaccard(a: Column, b: Column) -> Column:
 MAX_BAND_BUCKET_ROWS = 10_000
 
 
-def _bucket_overflow_message(max_bucket_rows: int) -> Column:
-    """Failure text for an over-cap band bucket, with the remediation."""
+def _bucket_overflow_message(max_bucket_rows: int, held: Column) -> Column:
+    """Failure text for an over-cap band bucket, with the remediation.
+    ``held`` is the bucket-size phrase: the exact count where the guard
+    knows it, "at least cap+1" where the capped form stopped counting."""
     return F.concat_ws(
         "",
         F.lit("LSH band bucket (band_id="),
@@ -259,7 +238,7 @@ def _bucket_overflow_message(max_bucket_rows: int) -> Column:
         F.lit(", band_key="),
         F.substring(F.col("band_key"), 1, 64),
         F.lit(") holds "),
-        F.col("__bucket_n").cast("string"),
+        held,
         F.lit(
             f" rows (cap {max_bucket_rows}): the band self-join would "
             "square this bucket into an unboundable candidate set. "
@@ -286,92 +265,22 @@ def guard_band_buckets(
     shuffle+sort is negligible. The full-corpus batch path needs NO
     standalone guard at all: :func:`candidate_pairs_minhash` (r8) fuses
     the cap check into the collect_list aggregate candidate generation
-    already requires, so the guard there costs one `count` column. To
-    guard a PERSISTED band table without generating pairs (e.g. when
-    publishing the incremental band index), use
-    :func:`guard_band_buckets_broadcast`. The failure message carries
-    the remediation (see MAX_BAND_BUCKET_ROWS)."""
+    already requires, so the guard there costs one `count` column. The
+    failure message carries the remediation (see MAX_BAND_BUCKET_ROWS)."""
     w = Window.partitionBy("band_id", "band_key")
     counted = bands.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
     # The guard lives in a FILTER whose predicate is a non-foldable
     # when/raise_error — Catalyst cannot constant-fold it away (unlike
     # `assert_true(...).isNull()`, which NullPropagation may rewrite),
     # and predicate pushdown cannot move it below the window it reads.
+    held = F.col("__bucket_n").cast("string")
     ok = F.when(
         F.col("__bucket_n") > F.lit(max_bucket_rows),
-        F.raise_error(_bucket_overflow_message(max_bucket_rows)).cast(
+        F.raise_error(_bucket_overflow_message(max_bucket_rows, held)).cast(
             "boolean"
         ),
     ).otherwise(F.lit(True))
     return counted.filter(ok).drop("__bucket_n")
-
-
-def guard_band_buckets_broadcast(
-    cached_bands: DataFrame, max_bucket_rows: int = MAX_BAND_BUCKET_ROWS
-) -> DataFrame:
-    """Standalone guard for a PERSISTED band table (e.g. validating the
-    incremental band index before publishing an append) — same
-    hard-fail contract as :func:`guard_band_buckets`, but instead of
-    window-counting (which shuffles and sorts the ENTIRE band table) it
-    aggregates per-bucket counts, keeps only the VIOLATING buckets —
-    empty on every healthy corpus — and broadcast-left-joins them back;
-    a row landing in a broadcast-matched bucket raises with the same
-    remediation. Healthy-path cost: one map-side-combinable count
-    aggregate plus an empty broadcast — no extra full-table shuffle, no
-    sort (measured 1.13× cheaper end-to-end than the window form at
-    sf0.1, identical pair sets). The batch CANDIDATE path no longer
-    routes through this function: :func:`candidate_pairs_minhash` (r8)
-    fuses the same cap into the collect_list aggregate it needs anyway,
-    which beat this guard-then-self-join shape by a further 0.7× —
-    this form remains for guarding a band table you are NOT about to
-    pair-expand.
-
-    ``cached_bands`` MUST be persisted (or otherwise cheap to re-read):
-    the hot-bucket aggregate is a second consumer of it, and an
-    unpersisted expensive lineage (minhash banding) would be computed
-    twice — measured 1.7× SLOWER than the window form when miswired
-    that way. The violating set is limit-capped before broadcast: ONE
-    violating bucket in the broadcast is enough to trip the guard, so
-    the cap cannot mask a violation, it only bounds driver memory when
-    a degenerate corpus violates in thousands of buckets at once."""
-    hot = (
-        cached_bands.groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("__bucket_n"))
-        .filter(F.col("__bucket_n") > F.lit(max_bucket_rows))
-        .limit(512)
-    )
-    joined = cached_bands.join(
-        F.broadcast(hot), ["band_id", "band_key"], "left"
-    )
-    ok = F.when(
-        F.col("__bucket_n").isNotNull(),
-        F.raise_error(_bucket_overflow_message(max_bucket_rows)).cast(
-            "boolean"
-        ),
-    ).otherwise(F.lit(True))
-    # re-select in the input's column order (the join moves its keys
-    # first) so both guard forms are drop-in interchangeable
-    return joined.filter(ok).select(*cached_bands.columns)
-
-
-def _bucket_overflow_message_capped(max_bucket_rows: int) -> Column:
-    """Failure text for the capped fused form: the row_number cap stops
-    counting at ``max_bucket_rows + 1``, so the exact bucket size is
-    unknowable by design — the message says "at least" instead."""
-    return F.concat_ws(
-        "",
-        F.lit("LSH band bucket (band_id="),
-        F.col("band_id").cast("string"),
-        F.lit(", band_key="),
-        F.substring(F.col("band_key"), 1, 64),
-        F.lit(f") holds at least {max_bucket_rows + 1}"),
-        F.lit(
-            f" rows (cap {max_bucket_rows}): the band self-join would "
-            "square this bucket into an unboundable candidate set. "
-            "Exact-dedup identical documents first, raise ROWS_PER_BAND "
-            "for more selective bands, or sub-split the bucket key."
-        ),
-    )
 
 
 def candidate_pairs_minhash(
@@ -407,7 +316,7 @@ def candidate_pairs_minhash(
     Scale shape: one exchange on (band_id, band_key) + a spillable
     in-partition sort (the window's cost — measured ~1.0–1.1× the r8
     aggregate-first shape on the sf0.1 candidate path, identical pair
-    sets; tools/proto_fused.py is the frozen three-arm A/B), the
+    sets; the three-arm A/B is recorded in NOTES_r9.md), the
     guarded aggregate reuses the window's partitioning (no second
     band exchange), pairs emit map-side via double explode of the
     cap-bounded list (10k bigint ids ≈ 80 KB per bucket row), and the
@@ -432,7 +341,9 @@ def candidate_pairs_minhash(
     ok = F.when(
         F.col("__bucket_n") > F.lit(max_bucket_rows),
         F.raise_error(
-            _bucket_overflow_message_capped(max_bucket_rows)
+            _bucket_overflow_message(
+                max_bucket_rows, F.lit(f"at least {max_bucket_rows + 1}")
+            )
         ).cast("boolean"),
     ).otherwise(F.lit(True))
     g = g.filter(ok).filter(F.col("__bucket_n") >= 2)
@@ -613,32 +524,13 @@ def simhash16(toks: Column) -> Column:
     return out.cast("long")
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Double-precision dot product as a left-to-right fold
-    (bit-reproducible across engines that fold sequentially)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Single-parse SQL builders for the fold kernels (r19, guide §1.2 build
-# cost): each python-side HOF construction (F.aggregate/F.zip_with with
-# python lambdas) costs ~30-60 py4j round trips; query builders that
-# assemble dozens of fold expressions (the ANN sweeps build ~29 dots
-# per invocation) paid ~1s of pure driver chatter per build. One
-# F.expr parse produces the semantically identical ArrayAggregate tree
-# (same casts, same fold order, same 0.0D seed, same default identity
-# finish lambda) in a single round trip. String variants exist for the
-# call sites whose inputs are plain SQL fragments (column names or
-# already-parsed array literals); Column-input call sites keep the
-# python builders above.
+# Vector fold kernels: double-precision left-to-right folds (same
+# casts, same fold order, same 0.0D seed), so values are
+# bit-reproducible across engines that fold sequentially.
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """SQL text of :func:`dot` over two SQL fragments."""
+    """SQL text of :func:`dot` over two array fragments."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * "
         f"cast(y as double)), 0.0D, (acc, v) -> acc + v)"
@@ -646,48 +538,31 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _l2norm_sql(a: str) -> str:
-    """SQL text of :func:`l2norm` over a SQL fragment."""
+    """SQL text of :func:`l2norm` over an array fragment."""
     return (
         f"sqrt(aggregate(transform({a}, x -> cast(x as double) * "
         f"cast(x as double)), 0.0D, (acc, v) -> acc + v))"
     )
 
 
-def dot_expr(a: str, b: str) -> Column:
-    """:func:`dot` built as ONE parsed expression — identical values."""
-    return F.expr(_dot_sql(a, b))
+def dot(a: str, b: str) -> Column:
+    """Double-precision dot product of array columns ``a`` and ``b``."""
+    return F.expr(_dot_sql(sql_ident(a), sql_ident(b)))
 
 
-def l2norm_expr(a: str) -> Column:
-    """:func:`l2norm` built as ONE parsed expression."""
-    return F.expr(_l2norm_sql(a))
-
-
-def cosine_expr(a: str, b: str) -> Column:
-    """:func:`cosine` built as ONE parsed expression."""
-    return F.expr(
-        f"{_dot_sql(a, b)} / ({_l2norm_sql(a)} * {_l2norm_sql(b)})"
-    )
-
-
-def l2norm(a: Column) -> Column:
-    """Euclidean norm with the same fold discipline. Precompute this per
-    ROW before any pairwise join — recomputing norms per pair multiplies
+def l2norm(a: str) -> Column:
+    """Euclidean norm of array column ``a``. Precompute this per ROW
+    before any pairwise join — recomputing norms per pair multiplies
     the fold cost by the average bucket size."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    return F.expr(_l2norm_sql(sql_ident(a)))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays (see dot/l2norm; for
-    pairwise workloads prefer dot(a,b)/(norm_a·norm_b) with norms
-    precomputed per row — identical value, one fold per pair)."""
-    return dot(a, b) / (l2norm(a) * l2norm(b))
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of array columns ``a`` and ``b``. For pairwise
+    workloads prefer dot(a, b) / (norm_a·norm_b) with norms
+    precomputed per row — identical value, one fold per pair."""
+    qa, qb = sql_ident(a), sql_ident(b)
+    return F.expr(f"{_dot_sql(qa, qb)} / ({_l2norm_sql(qa)} * {_l2norm_sql(qb)})")
 
 
 #: hard cap on rows per cosine block: b=10k rows → ~5·10⁷ pair-sims and

@@ -18,7 +18,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from movies_etl_spark.operators.dedup import cosine_expr  # noqa: F401
+from movies_etl_spark.operators.dedup import (
+    _dot_sql,
+    cosine,
+    dot,
+    l2norm,
+    sql_ident,
+)
 
 #: Hard cap on the probe-side collect in :func:`topk_bruteforce_vectorized`
 #: — the MAX_LOCAL_EDGES discipline (dedup.py) applied to the query frame.
@@ -31,6 +37,12 @@ from movies_etl_spark.operators.dedup import cosine_expr  # noqa: F401
 #: over-cap probe frame fails loudly with remediation instead of
 #: silently OOMing the driver at 100 TB.
 MAX_LOCAL_QUERIES = 100_000
+
+
+def _double_array(vec_col: str) -> Column:
+    """Array column ``vec_col`` with every element cast to double (exact
+    for float input), as one parsed expression."""
+    return F.expr(f"transform({sql_ident(vec_col)}, x -> cast(x as double))")
 
 
 def topk_bruteforce(
@@ -57,7 +69,7 @@ def topk_bruteforce(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr("qvec", "cvec"), 6).alias("sim"),
+            F.round(cosine("qvec", "cvec"), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -131,7 +143,7 @@ def topk_ivf(
         "query_id",
         "qvec",
         F.col(label_col).alias("probe_label"),
-        F.round(cosine_expr("qvec", "centroid"), 6).alias("csim"),
+        F.round(cosine("qvec", "centroid"), 6).alias("csim"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("probe_label"))
     best = (
@@ -152,7 +164,7 @@ def topk_ivf(
             "query_id",
             "probe_label",
             "neighbor_id",
-            F.round(cosine_expr("qvec", "cvec"), 6).alias("sim"),
+            F.round(cosine("qvec", "cvec"), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
@@ -160,18 +172,6 @@ def topk_ivf(
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )
-
-
-def sq_dist(a: Column, b: Column) -> Column:
-    """Squared euclidean distance as a left-to-right double fold (same
-    bit-reproducibility discipline as dedup.dot/l2norm)."""
-    diff = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def _centroid_boundary(cents: DataFrame) -> DataFrame:
@@ -211,11 +211,10 @@ def _assign_cells(v_df: DataFrame, cents: DataFrame) -> DataFrame:
     packed = cents.agg(
         F.collect_list(F.struct("cell", "centroid")).alias("cc")
     )
-    # single-parse argmin (r19, guide §1.2 build cost): the python-HOF
-    # construction (transform lambda + sq_dist's zip_with/aggregate
-    # lambdas) cost ~0.3-0.5 s of py4j chatter per assignment pass;
-    # this is the identical expression tree — same casts, same fold
-    # order, same 6-place rounding — in one parse.
+    # single-parse argmin (r19 build cost): squared
+    # euclidean distance as a left-to-right double fold (the dot/l2norm
+    # discipline), 6-place rounding, built in one parse instead of
+    # ~0.3-0.5 s of python-HOF py4j chatter per assignment pass.
     best = F.expr(
         "array_min(transform(cc, c -> struct("
         "round(aggregate(zip_with(vd, c.centroid, (x, y) -> "
@@ -282,9 +281,7 @@ def kmeans_assign(
     frame) skips a whole shuffle-join back onto the embedding table;
     float→double casts are exact, so downstream cosine over ``vd`` is
     bit-identical to cosine over the raw column."""
-    v = corpus.select(
-        id_col, F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("vd")
-    )
+    v = corpus.select(id_col, _double_array(vec_col).alias("vd"))
     cents = v.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cell"), F.col("vd").alias("centroid")
     )
@@ -465,130 +462,30 @@ def multiprobe_offsets(n_planes: int, radius: int) -> list[int]:
     ]
 
 
-def rp_bucket_n(vec: Column | str, n_planes: int) -> Column:
-    """Parametrized sign-LSH bucket in [0, 2^n_planes) over the shared
-    md5 plane family — :func:`rp_bucket` is the n_planes=8 member (same
-    rounding discipline: projection rounded to 6 before the sign test).
-    Pure per-row map, same scale shape as rp_bucket.
+def rp_bucket_n(vec_col: str, n_planes: int) -> Column:
+    """Sign-LSH bucket in [0, 2^n_planes) of array column ``vec_col``
+    over the shared md5 plane family: bit j is the sign of the dot
+    product with hyperplane j, rounded to 6 places before the sign test
+    so a near-zero projection cannot flip between engines. Pure per-row
+    map — the corpus is bucketed in the same scan that reads it, and at
+    scale the bucket doubles as the layout partition key exactly like
+    the IVF cell.
 
-    Each plane's literal array is built as ONE parsed SQL expression
-    (``array(0.12D, …)``) instead of dim ``F.lit`` py4j calls: the
-    width-16 bucket column cost ~1.4 s of pure driver chatter per
-    invocation the literal way (r11 measurement) vs ~30 ms parsed. The
-    parsed ``xD`` double literals produce the identical
-    CreateArray(Literal double) tree, so values, codegen, and the
-    prefix-nesting property are unchanged (pinned by
-    test_rp_bucket_n_8_matches_rp_bucket).
-
-    r19 (guide §1.2 build cost): pass ``vec`` as a column NAME (str)
-    and the ENTIRE bucket column — per-plane dot folds, rounding, sign
-    CASEs, sum — is built as one parsed expression, collapsing the
-    remaining ~n_planes×(HOF lambda plumbing) py4j round trips (~0.5 s
-    per width-8 invocation) into a single parse. Same expression tree,
-    same values (pinned by test_rp_bucket_n_str_matches_column); the
-    Column path remains for composed inputs."""
-    from movies_etl_spark.operators.dedup import _dot_sql, dot
-
-    if isinstance(vec, str):
-        terms = []
-        for j, plane in enumerate(rp_planes_n(n_planes)):
-            arr = "array(" + ",".join(f"{v!r}D" for v in plane) + ")"
-            terms.append(
-                f"(CASE WHEN round({_dot_sql(vec, arr)}, 6) >= 0 "
-                f"THEN {1 << j} ELSE 0 END)"
-            )
-        return F.expr("0 + " + " + ".join(terms))
-    bucket = F.lit(0)
+    The whole bucket column — per-plane literal arrays (``array(0.12D,
+    …)``), dot folds, rounding, sign CASEs, sum — is ONE parsed
+    expression: built from F.lit/python-HOF calls, the width-16 bucket
+    cost ~1.4 s of py4j chatter per invocation (r11) and width 8 ~0.5 s
+    (r19)."""
+    v = sql_ident(vec_col)
+    terms = []
     for j, plane in enumerate(rp_planes_n(n_planes)):
-        lit_plane = F.expr(
-            "array(" + ",".join(f"{v!r}D" for v in plane) + ")"
+        arr = "array(" + ",".join(f"{x!r}D" for x in plane) + ")"
+        terms.append(
+            f"(CASE WHEN round({_dot_sql(v, arr)}, 6) >= 0 "
+            f"THEN {1 << j} ELSE 0 END)"
         )
-        bit = F.when(
-            F.round(dot(vec, lit_plane), 6) >= 0, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
+    return F.expr("0 + " + " + ".join(terms))
 
-
-def lsh_candidates_param(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_planes: int,
-    radius: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Scored multi-probe candidates (query_id, neighbor_id, sim) for
-    an arbitrary (planes, radius) point on the recall-vs-scan frontier
-    — the candidate stage of :func:`topk_multiprobe_lsh`, parametrized
-    and exposed so the frontier sweep can meter SCAN WORK (candidate
-    row count) separately from result quality (recall of the top-k cut).
-
-    Same scale shape as topk_multiprobe_lsh: probes are queries ×
-    Σ C(n_planes, ≤radius) XOR offsets — still a broadcast-sized frame
-    — and candidate generation is a pure equi-join on the probe bucket;
-    the corpus is bucketed in its own scan and never shuffled. At scale
-    the bucket is the layout partition key, so a probe set prunes to
-    its buckets at the FILE level regardless of (planes, radius)."""
-    from movies_etl_spark.operators.dedup import dot_expr, l2norm_expr
-
-    offs = multiprobe_offsets(n_planes, radius)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        rp_bucket_n(vec_col, n_planes).cast("int").alias("bucket"),
-        l2norm_expr(vec_col).alias("cnrm"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        rp_bucket_n(vec_col, n_planes).cast("int").alias("qbucket"),
-        l2norm_expr(vec_col).alias("qnrm"),
-    )
-    probes = q.withColumn(
-        "off", F.explode(F.array(*[F.lit(o) for o in offs]))
-    ).select(
-        "query_id",
-        "qvec",
-        "qnrm",
-        F.col("qbucket").bitwiseXOR(F.col("off")).cast("int").alias("probe_bucket"),
-    )
-    sim = F.round(
-        dot_expr("qvec", "cvec") / (F.col("qnrm") * F.col("cnrm")), 6
-    )
-    return (
-        c.join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("probe_bucket"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-
-
-def topk_multiprobe_lsh_param(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_planes: int,
-    radius: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Top-k cut of :func:`lsh_candidates_param` — the tunable
-    operating-point form of :func:`topk_multiprobe_lsh` (which is the
-    frozen n_planes=8/radius=2 member). The ISOTROPIC operating point
-    the r9 frontier sweep selected: n_planes=8, radius=3 — recall@5
-    0.625 at a 37% scan budget (0.675 at 39% for 10/4; see SCALE.md's
-    frontier table and the ann_frontier_sweep query) — against the
-    honest isotropic ceiling where recall-per-scan caps near ~1.7×;
-    clustered corpora reach 0.97@5 at 14% with radius 1."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        lsh_candidates_param(corpus, queries, n_planes, radius, id_col, vec_col)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
 
 #: clustered-fixture noise scale: cluster member = center + NOISE·self.
 #: At 0.12 the within-cluster cosine is ≈ 0.97 — tight clusters like
@@ -633,22 +530,11 @@ def clustered_fixture(
     )
 
 
-def rp_bucket(vec: Column | str) -> Column:
-    """Sign-LSH bucket id in [0, 2^RP_N_PLANES): bit j is the sign of the
-    dot product with hyperplane j (dot rounded to 6 places before the
-    sign test so a near-zero projection cannot flip between engines).
-    Pure per-row map — the corpus is bucketed in the same scan that
-    reads it, and at scale the bucket doubles as the layout partition
-    key exactly like the IVF cell.
-
-    Since r19 this is literally :func:`rp_bucket_n`'s n=8 member
-    (planes 0..7 of the md5 family ARE :data:`RP_PLANES` — the prefix
-    property in rp_planes_n's doc; value parity was already pinned by
-    test_rp_bucket_n_8_matches_rp_bucket): the old per-plane
-    ``F.array(*[F.lit(v) …])`` construction cost ~512 py4j literal
-    calls per invocation. Pass a column NAME for the single-parse
-    build."""
-    return rp_bucket_n(vec, RP_N_PLANES)
+def rp_bucket(vec_col: str) -> Column:
+    """Sign-LSH bucket id in [0, 2^RP_N_PLANES): :func:`rp_bucket_n`'s
+    n=8 member (planes 0..7 of the md5 family ARE :data:`RP_PLANES` —
+    the prefix property in rp_planes_n's doc)."""
+    return rp_bucket_n(vec_col, RP_N_PLANES)
 
 
 def topk_multiprobe_lsh(
@@ -668,27 +554,34 @@ def topk_multiprobe_lsh(
     theoretic ceiling for ANY pruning index; clustered real embeddings
     are where the same machinery reaches high recall cheaply).
 
-    Scale shape: the probe expansion is queries × 37 XOR offsets — still
-    a tiny broadcast side — and candidate generation stays a pure
-    EQUI-join on the probe bucket (never a Hamming theta-join against
-    the corpus). Probe buckets per query are distinct, so no candidate
-    dedup pass is needed. The corpus is bucketed in its own scan and
-    never shuffled; at scale the bucket is the layout partition key, so
-    a 37-probe query prunes to 37 of 256 partitions at the FILE level."""
-    from movies_etl_spark.operators.dedup import dot, l2norm
+    ``offsets`` picks the operating point on the recall-vs-scan
+    frontier: ``offsets=multiprobe_offsets(RP_N_PLANES, r)`` probes the
+    Hamming ball of radius r over the 8-bit signatures (default: radius
+    2). The isotropic operating point the r9 frontier sweep selected is
+    radius 3 — recall@5 0.625 at a 37% scan budget (SCALE.md's frontier
+    table and the ann_frontier_sweep query); clustered corpora reach
+    0.97@5 at 14% with radius 1.
 
+    Scale shape: the probe expansion is queries × |offsets| XOR offsets
+    — still a tiny broadcast side — and candidate generation stays a
+    pure EQUI-join on the probe bucket (never a Hamming theta-join
+    against the corpus). Probe buckets per query are distinct, so no
+    candidate dedup pass is needed. The corpus is bucketed in its own
+    scan and never shuffled; at scale the bucket is the layout
+    partition key, so a 37-probe query prunes to 37 of 256 partitions
+    at the FILE level."""
     offs = MULTIPROBE_OFFSETS_H2 if offsets is None else offsets
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
         rp_bucket(vec_col).cast("int").alias("bucket"),
-        l2norm(F.col(vec_col)).alias("cnrm"),
+        l2norm(vec_col).alias("cnrm"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         rp_bucket(vec_col).cast("int").alias("qbucket"),
-        l2norm(F.col(vec_col)).alias("qnrm"),
+        l2norm(vec_col).alias("qnrm"),
     )
     probes = q.withColumn(
         "off", F.explode(F.array(*[F.lit(o) for o in offs]))
@@ -698,9 +591,7 @@ def topk_multiprobe_lsh(
         "qnrm",
         F.col("qbucket").bitwiseXOR(F.col("off")).cast("int").alias("probe_bucket"),
     )
-    sim = F.round(
-        dot(F.col("qvec"), F.col("cvec")) / (F.col("qnrm") * F.col("cnrm")), 6
-    )
+    sim = F.round(dot("qvec", "cvec") / (F.col("qnrm") * F.col("cnrm")), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         c.join(
@@ -757,17 +648,16 @@ def retrieve_quantized_multiprobe(
     the STORED index at 100 TB (the float vectors live in the rerank
     store, fetched only for the ~n_candidates winners)."""
     from movies_etl_spark.operators.curation import int8_quantize, int8_scale
-    from movies_etl_spark.operators.dedup import l2norm_expr
 
     def prep(df, prefix):
-        d = F.expr(f"transform({vec_col}, x -> cast(x as double))")
+        d = _double_array(vec_col)
         sc = int8_scale(d)
         return df.select(
             F.col(id_col).alias(f"{prefix}id"),
             d.alias(f"{prefix}vec"),
             int8_quantize(d, sc).alias(f"{prefix}qv"),
             sc.alias(f"{prefix}scale"),
-            l2norm_expr(vec_col).alias(f"{prefix}nrm"),
+            l2norm(vec_col).alias(f"{prefix}nrm"),
             rp_bucket(vec_col).cast("int").alias(f"{prefix}bucket"),
         )
 
@@ -894,9 +784,7 @@ def kmeans_train_assign(
     iterations — kmeans_assign(c) ≡ kmeans_train_assign(c, c)); the
     final training centroids then assign ``assign``'s vectors. Returns
     (id, cell, d2 rounded 4)."""
-    vt = train.select(
-        id_col, F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("vd")
-    )
+    vt = train.select(id_col, _double_array(vec_col).alias("vd"))
     cents = vt.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cell"), F.col("vd").alias("centroid")
     )
@@ -904,9 +792,7 @@ def kmeans_train_assign(
     for _ in range(iters - 1):
         cents = _recompute_centroids(assigned)
         assigned = _assign_cells(vt, cents)
-    va = assign.select(
-        id_col, F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("vd")
-    )
+    va = assign.select(id_col, _double_array(vec_col).alias("vd"))
     return _assign_cells(va, _centroid_boundary(cents)).select(
         id_col, "cell", F.round(F.col("d2"), 4).alias("d2")
     )

@@ -49,7 +49,7 @@ def _micros(c) -> "F.Column":
 #: one scan + one user_id exchange + a three-window stack + a
 #: partitioning-reusing dedup aggregate. Values identical (the
 #: conditional window min IS the stage join+filter+min). Adjudicated
-#: by tools/ab_funnel_onepass.py — numbers there and in NOTES_r14.
+#: by an interleaved A/B — numbers in NOTES_r14.
 FUNNEL_ONE_PASS = True
 
 
@@ -700,8 +700,7 @@ def q_bm25_rank(spark, sf_dir):
 #: a 2-struct (t, delta) array: same rows, same types (both deltas are
 #: int literals, both timestamps the same ntz cast), so values are
 #: identical by construction; runtime events scans drop 4 → 2.
-#: Adjudicated by tools/ab_concurrency_onescan.py — numbers there and
-#: in NOTES_r15.
+#: Adjudicated by an interleaved A/B — numbers in NOTES_r15.
 CONCURRENCY_ONE_SCAN = True
 
 

@@ -420,7 +420,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         "doc_id",
         "lang",
         "n_chars",
-        D.shingle_hash_array(TX.tokens(F.col("text"))).alias("shingles"),
+        D.shingle_hash_array("text").alias("shingles"),
     ).filter(F.size("shingles") > 0)
     a = sh.select(
         F.col("doc_id").alias("id_a"), "lang", "n_chars", F.col("shingles").alias("sh_a")
@@ -482,7 +482,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     # norms precomputed per vector BEFORE the pairwise join — identical
     # doubles, one fold per pair instead of three
     e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", D.l2norm_expr("embedding").alias("nrm")
+        "vec_id", "label", "embedding", D.l2norm("embedding").alias("nrm")
     )
     a = e.select(
         F.col("vec_id").alias("id_a"), "label",
@@ -494,7 +494,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
         F.col("embedding").alias("vb"),
         F.col("nrm").alias("nrm_b"),
     )
-    cos = D.dot_expr("va", "vb") / (F.col("nrm_a") * F.col("nrm_b"))
+    cos = D.dot("va", "vb") / (F.col("nrm_a") * F.col("nrm_b"))
     return (
         a.join(
             b,
@@ -634,7 +634,7 @@ def q_similarity_ann_lsh(spark, sf_dir):
         "vec_id",
         "embedding",
         SIM.rp_bucket("embedding").cast("int").alias("bucket"),
-        D.l2norm_expr("embedding").alias("nrm"),
+        D.l2norm("embedding").alias("nrm"),
     )
     qs = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
@@ -648,7 +648,7 @@ def q_similarity_ann_lsh(spark, sf_dir):
         & (F.col("vec_id") != F.col("query_id")),
     )
     sim = F.round(
-        D.dot_expr("qvec", "embedding") / (F.col("qnrm") * F.col("nrm")), 6
+        D.dot("qvec", "embedding") / (F.col("qnrm") * F.col("nrm")), 6
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")
@@ -1229,7 +1229,7 @@ def q_embedding_normalize(spark, sf_dir):
     expression): L2 norm + first unit-vector component, scalar-projected
     for portable comparison."""
     e = _t(spark, sf_dir, "embeddings")
-    nrm = D.l2norm_expr("embedding")
+    nrm = D.l2norm("embedding")
     e0 = F.element_at(F.col("embedding"), 1).cast("double")
     return e.select(
         "vec_id",
@@ -1736,8 +1736,8 @@ _MINHASH_EST_SQL = " + ".join(
 #: read them, instead of each re-deriving the array_min folds from the
 #: persisted shingles — 3 fold evaluations per doc → 1, for 8 longs/doc
 #: of extra persist. Values identical by construction (same fold, same
-#: band concat). Adjudicated by tools/ab_minhash_sig.py — numbers there
-#: and in NOTES_r14.
+#: band concat). Adjudicated by an interleaved A/B — numbers in
+#: NOTES_r14.
 MINHASH_EST_SHARED_SIG = True
 
 @query(
@@ -1781,7 +1781,7 @@ def q_minhash_jaccard_estimate(spark, sf_dir):
     banding + both join sides read them, instead of each of the three
     consumers re-deriving the folds from the persisted shingles."""
     corpus = _near_corpus(spark, sf_dir)
-    sig = D.minhash_signature(F.col("shingles"))
+    sig = D.minhash_signature("shingles")
     if MINHASH_EST_SHARED_SIG:
         m_cols = [f"m{i}" for i in range(D.N_MINHASH)]
         sh_all = caching.tracked_persist(
@@ -1975,8 +1975,7 @@ def q_lang_id_confusion(spark, sf_dir):
 #: ONE lazy tracked checkpoint — the frontier's shared-scan pattern —
 #: and every arm reads the LogicalRDD leaf. Candidates/values identical
 #: (the checkpoint materializes the same rows the arms each rebuilt).
-#: Adjudicated by tools/ab_recall_shared.py — numbers there and in
-#: NOTES_r15.
+#: Adjudicated by an interleaved A/B — numbers in NOTES_r15.
 RECALL_SHARED_SCAN = True
 
 
@@ -2184,7 +2183,7 @@ ANN_FRONTIER_IVF_NPROBES: dict[str, list[int]] = {
 #: widths and joins once against the cfg-tagged union of every config's
 #: probe rows — instead of one broadcast join (and one corpus scan) per
 #: config. Candidate sets are provably identical per config; adjudicated
-#: by tools/ab_frontier_shared.py (values + interleaved timings).
+#: by an interleaved A/B (values + timings in NOTES_r14).
 #: ADOPTED r14: 15-row output identical, exec 84 → 62 jobs, interleaved
 #: warm medians 8.755 → 7.958 s (0.909) at sf0.1 — and the 100-TB shape
 #: is one pass over the corpus-scale signature table per arm instead of
@@ -2449,7 +2448,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
     analyses at build, one stage wave instead of 15 at exec. No
     collects, no corpus shuffles."""
     from movies_etl_spark.operators import caching
-    from movies_etl_spark.operators.dedup import cosine_expr, dot_expr, l2norm_expr
+    from movies_etl_spark.operators.dedup import cosine, dot, l2norm
 
     e = _t(spark, sf_dir, "embeddings")
 
@@ -2476,7 +2475,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
             SIM.rp_bucket_n("embedding", width)
             .cast("int")
             .alias("bucket"),
-            l2norm_expr("embedding").alias("cnrm"),
+            l2norm("embedding").alias("cnrm"),
         ]
         if cell_col is not None:
             sel.append(F.col(cell_col).alias("cell"))
@@ -2500,7 +2499,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
         return c_all, q_all, exact, denom
 
     sim = F.round(
-        dot_expr("qvec", "cvec") / (F.col("qnrm") * F.col("cnrm")),
+        dot("qvec", "cvec") / (F.col("qnrm") * F.col("cnrm")),
         6,
     )
 
@@ -2631,7 +2630,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
             "qvec",
             "qnrm",
             "cell",
-            F.round(cosine_expr("qvec", "centroid"), 6).alias(
+            F.round(cosine("qvec", "centroid"), 6).alias(
                 "csim"
             ),
         )
@@ -2662,7 +2661,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
             "qvec",
             "qnrm",
             "cell",
-            F.round(cosine_expr("qvec", "centroid"), 6).alias(
+            F.round(cosine("qvec", "centroid"), 6).alias(
                 "csim"
             ),
         )
@@ -2985,7 +2984,7 @@ def q_similarity_ann_tuned(spark, sf_dir):
     is a join key, so at 100 TB the selection costs one small-frame
     sort, not a re-plan)."""
     from movies_etl_spark.operators import caching
-    from movies_etl_spark.operators.dedup import dot_expr, l2norm_expr
+    from movies_etl_spark.operators.dedup import dot, l2norm
 
     e = _t(spark, sf_dir, "embeddings")
     cf = caching.tracked_local_checkpoint(
@@ -3009,7 +3008,7 @@ def q_similarity_ann_tuned(spark, sf_dir):
             SIM.rp_bucket_n("embedding", 8).cast("int").alias(
                 "bucket"
             ),
-            l2norm_expr("embedding").alias("cnrm"),
+            l2norm("embedding").alias("cnrm"),
             "cell",
         ),
         eager=False,
@@ -3032,7 +3031,7 @@ def q_similarity_ann_tuned(spark, sf_dir):
         eager=False,
     )
     sim = F.round(
-        dot_expr("qvec", "cvec") / (F.col("qnrm") * F.col("cnrm")),
+        dot("qvec", "cvec") / (F.col("qnrm") * F.col("cnrm")),
         6,
     )
     # LSH arm: cfg-tagged probe union, ONE corpus join (both configs at
@@ -3083,8 +3082,8 @@ def q_similarity_ann_tuned(spark, sf_dir):
         "qnrm",
         "cell",
         F.round(
-            dot_expr("qvec", "centroid")
-            / (F.col("qnrm") * l2norm_expr("centroid")),
+            dot("qvec", "centroid")
+            / (F.col("qnrm") * l2norm("centroid")),
             6,
         ).alias("csim"),
     )

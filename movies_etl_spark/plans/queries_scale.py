@@ -2608,8 +2608,8 @@ _CMS_JOIN_ORACLE = """
 #: inner-join null semantics), both exact sums coalesce to 0 on empty
 #: input (zero-'R' or empty lineitem), and cms_inner_product_pair drops
 #: NULL-cell rows exactly as the (seed, cell) equi-join did.
-#: Adjudicated by tools/ab_cms_fused.py — numbers there and in
-#: NOTES_r14; degenerate-input identity pinned in
+#: Adjudicated by an interleaved A/B — numbers in NOTES_r14;
+#: degenerate-input identity pinned in
 #: test_cms_join_fused_identity_degenerate_inputs.
 CMS_JOIN_FUSED = True
 

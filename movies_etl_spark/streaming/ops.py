@@ -681,9 +681,9 @@ def _verify_dropped(
     micro-batch contract as `touched`/`bnew` above. The r10-rejected
     candidate-id broadcast SEMI-PRUNE of the store is retired
     PERMANENTLY: measured across a 64× store-size range (10k → 640k
-    docs, small fixed batch — tools/ab_verify_prune.py, SCALE.md
-    table), its extra prune pass never beats the direct broadcast join,
-    which already makes the store map-only.
+    docs, small fixed batch — SCALE.md table, NOTES_r11), its extra
+    prune pass never beats the direct broadcast join, which already
+    makes the store map-only.
 
     ONE store pass, not two (r19, VERDICT r18 next-round #1): cand's
     ``id_b`` side comes exclusively from the BATCH's own bands (``bnew``
@@ -738,13 +738,15 @@ def lsh_dedup_batch(
 ) -> None:
     """ONE micro-batch of the streaming MinHash-LSH near-dedup — the
     foreachBatch body of ``lsh_dedup_stream``, extracted to module level
-    (r14) so the store-side scale harness (tools/scale_lsh_store.py)
-    measures the EXACT shipped per-batch plan against pre-built stores
-    instead of a reimplementation that could drift. Shingles + bands the
-    batch's own documents, reads the accumulated band/shingle index for
-    batches strictly below ``batch_id``, candidate-joins batch-touched
-    buckets, Jaccard-verifies, and writes survivors/bands/shingles into
-    ``batch=N``-addressed dirs (overwrite → retry-idempotent)."""
+    (r14) so a store-side scale harness can measure the EXACT shipped
+    per-batch plan against pre-built stores instead of a
+    reimplementation that could drift (the r14-r16 store-size curves in
+    SCALE.md and NOTES_r14-r16 were measured this way). Shingles + bands
+    the batch's own documents, reads the accumulated band/shingle index
+    for batches strictly below ``batch_id``, candidate-joins
+    batch-touched buckets, Jaccard-verifies, and writes
+    survivors/bands/shingles into ``batch=N``-addressed dirs
+    (overwrite → retry-idempotent)."""
     from movies_etl_spark.operators import dedup as D
 
     sh_b = D.shingled(batch_df, "text", "doc_id").cache()

@@ -93,12 +93,12 @@ def test_multiprobe_scan_fraction_bounded(spark, recall_frames):
     n_queries = q.count()
     c = e.select(
         F.col("vec_id").alias("neighbor_id"),
-        SIM.rp_bucket(F.col("embedding")).cast("int").alias("bucket"),
+        SIM.rp_bucket("embedding").cast("int").alias("bucket"),
     )
     probes = (
         q.select(
             F.col("vec_id").alias("query_id"),
-            SIM.rp_bucket(F.col("embedding")).cast("int").alias("qbucket"),
+            SIM.rp_bucket("embedding").cast("int").alias("qbucket"),
         )
         .withColumn(
             "off", F.explode(F.array(*[F.lit(o) for o in SIM.MULTIPROBE_OFFSETS_H2]))
@@ -131,46 +131,10 @@ def test_rp_bucket_n_8_matches_rp_bucket(spark, recall_frames):
     bit-for-bit (same planes, same rounding discipline)."""
     e, _, _ = recall_frames
     both = e.select(
-        SIM.rp_bucket(F.col("embedding")).cast("int").alias("b8"),
-        SIM.rp_bucket_n(F.col("embedding"), 8).cast("int").alias("bn"),
+        SIM.rp_bucket("embedding").cast("int").alias("b8"),
+        SIM.rp_bucket_n("embedding", 8).cast("int").alias("bn"),
     )
     assert both.filter(F.col("b8") != F.col("bn")).count() == 0
-
-
-def test_rp_bucket_n_str_matches_column(spark, recall_frames):
-    """The r19 single-parse string path (whole bucket column built as
-    one F.expr) is value-identical to the Column path at both widths,
-    and the single-parse fold kernels (dot_expr/l2norm_expr/cosine_expr)
-    match their python-HOF builders bit-for-bit."""
-    from movies_etl_spark.operators import dedup as D
-
-    e, _, _ = recall_frames
-    for width in (8, 16):
-        both = e.select(
-            SIM.rp_bucket_n(F.col("embedding"), width)
-            .cast("int")
-            .alias("bc"),
-            SIM.rp_bucket_n("embedding", width).cast("int").alias("bs"),
-        )
-        assert both.filter(F.col("bc") != F.col("bs")).count() == 0
-    pair = e.select(
-        F.col("embedding").alias("a"),
-        F.reverse(F.col("embedding")).alias("b"),
-    )
-    kernels = pair.select(
-        D.dot(F.col("a"), F.col("b")).alias("d_col"),
-        D.dot_expr("a", "b").alias("d_str"),
-        D.l2norm(F.col("a")).alias("n_col"),
-        D.l2norm_expr("a").alias("n_str"),
-        D.cosine(F.col("a"), F.col("b")).alias("c_col"),
-        D.cosine_expr("a", "b").alias("c_str"),
-    )
-    bad = kernels.filter(
-        (F.col("d_col") != F.col("d_str"))
-        | (F.col("n_col") != F.col("n_str"))
-        | (F.col("c_col") != F.col("c_str"))
-    )
-    assert bad.count() == 0
 
 
 def test_frontier_operating_point_floor(spark, recall_frames):
@@ -179,9 +143,15 @@ def test_frontier_operating_point_floor(spark, recall_frames):
     (measured 0.625 there; 0.55 at this sf0.01 fixture — floor set
     under both), and radius must stay a monotone recall dial."""
     e, q, exact = recall_frames
-    r2 = SIM.recall_at_k(exact, SIM.topk_multiprobe_lsh_param(e, q, 8, 2))
-    r3 = SIM.recall_at_k(exact, SIM.topk_multiprobe_lsh_param(e, q, 8, 3))
-    r4 = SIM.recall_at_k(exact, SIM.topk_multiprobe_lsh_param(e, q, 8, 4))
+    r2, r3, r4 = (
+        SIM.recall_at_k(
+            exact,
+            SIM.topk_multiprobe_lsh(
+                e, q, offsets=SIM.multiprobe_offsets(8, radius)
+            ),
+        )
+        for radius in (2, 3, 4)
+    )
     assert r3 >= 0.45
     assert r4 >= 0.7
     assert r2 <= r3 <= r4

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+import kernel_reference as ref
 
 QUERIES = entrymod.queries()
 
@@ -235,15 +236,7 @@ def test_minhash_verified_pairs_have_true_jaccard(spark, sf_dir):
     independently tokenized corpus (banding recall is probabilistic by
     design; the VERIFY step is exact and must never pass a false
     positive)."""
-    import hashlib
-
     import pandas as pd
-
-    from movies_etl_spark.operators.dedup import (
-        MINHASH_P,
-        SHINGLE_C1,
-        SHINGLE_C2,
-    )
 
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
     corpus = {int(r.doc_id): r.text for r in docs.itertuples()}
@@ -252,17 +245,7 @@ def test_minhash_verified_pairs_have_true_jaccard(spark, sf_dir):
         if int(r.doc_id) % 50 == 0 and len(toks) >= 20:
             corpus[int(r.doc_id) + 1000000] = " ".join(toks[: len(toks) - 10])
 
-    def shingles(text):
-        th = [
-            int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % MINHASH_P
-            for t in text.split(" ")
-        ]
-        return {
-            (th[i] * SHINGLE_C1 + th[i + 1] * SHINGLE_C2 + th[i + 2]) % MINHASH_P
-            for i in range(len(th) - 2)
-        } if len(th) >= 3 else set()
-
-    sh = {d: shingles(t) for d, t in corpus.items()}
+    sh = {d: set(ref.shingle_hashes(t)) for d, t in corpus.items()}
     pairs = QUERIES["dedup_minhash_lsh"](spark, sf_dir).collect()
     assert len(pairs) > 0
     for r in pairs:
@@ -277,9 +260,6 @@ def test_hash_fingerprints_match_python_witnesses(spark, sf_dir):
     all replay-oracled (md5-derived arithmetic mirrored in SQL); this
     recomputes each in plain python/numpy for every document/vector and
     requires bit-identical agreement."""
-    import hashlib
-
-    import numpy as np
     import pandas as pd
 
     from movies_etl_spark.operators.similarity import RP_PLANES
@@ -287,11 +267,8 @@ def test_hash_fingerprints_match_python_witnesses(spark, sf_dir):
     # --- simhash16 + rolling hash over documents
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
 
-    def tok_hash(t):
-        return int(hashlib.md5(t.encode()).hexdigest()[:12], 16)
-
     def simhash16(text):
-        hs = [tok_hash(t) for t in text.split(" ")]
+        hs = [ref.token_hash(t) for t in text.split(" ")]
         out = 0
         for j in range(16):
             s = sum(((h >> j) & 1) * 2 - 1 for h in hs)
@@ -302,7 +279,7 @@ def test_hash_fingerprints_match_python_witnesses(spark, sf_dir):
     def rolling(text):
         acc = 0
         for t in text.split(" "):
-            acc = (acc * 31 + tok_hash(t)) % 1000000007
+            acc = (acc * 31 + ref.token_hash(t)) % 1000000007
         return acc
 
     want_sim = {int(r.doc_id): simhash16(r.text) for r in docs.itertuples()}
@@ -321,28 +298,18 @@ def test_hash_fingerprints_match_python_witnesses(spark, sf_dir):
 
     # --- rp_bucket over embeddings (left-to-right fold, rounded sign)
     emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
-    P = np.array(RP_PLANES)
-
-    def bucket(vec):
-        out = 0
-        for j, plane in enumerate(P):
-            acc = 0.0
-            for x, p in zip(vec, plane):
-                acc += float(x) * float(p)
-            if round(acc, 6) >= 0:
-                out += 1 << j
-        return out
-
-    want_b = {int(r.vec_id): bucket(r.embedding) for r in emb.itertuples()}
+    want_b = {
+        int(r.vec_id): ref.rp_bucket(r.embedding, RP_PLANES)
+        for r in emb.itertuples()
+    }
     from movies_etl_spark.operators import similarity as SIM
     from movies_etl_spark.sources import readers
-    from pyspark.sql import functions as F2
 
     e = readers.load_table(spark, sf_dir, "embeddings")
     got_b = {
         r["vec_id"]: r["bucket"]
         for r in e.select(
-            "vec_id", SIM.rp_bucket(F2.col("embedding")).cast("int").alias("bucket")
+            "vec_id", SIM.rp_bucket("embedding").cast("int").alias("bucket")
         ).collect()
     }
     assert got_b == want_b
@@ -359,15 +326,6 @@ def test_curation_pipeline_matches_python_reimplementation(spark, sf_dir):
     import itertools
 
     import pandas as pd
-
-    from movies_etl_spark.operators.dedup import (
-        MINHASH_P,
-        MINHASH_SEEDS,
-        N_BANDS,
-        N_MINHASH,
-        SHINGLE_C1,
-        SHINGLE_C2,
-    )
 
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
     corpus = {int(r.doc_id): r.text for r in docs.itertuples()}
@@ -402,24 +360,12 @@ def test_curation_pipeline_matches_python_reimplementation(spark, sf_dir):
     }
 
     # MinHash-LSH banded candidates + Jaccard-verified edges
-    def shingles(text):
-        th = [
-            int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % MINHASH_P
-            for t in text.split(" ")
-        ]
-        return [
-            (th[i] * SHINGLE_C1 + th[i + 1] * SHINGLE_C2 + th[i + 2]) % MINHASH_P
-            for i in range(len(th) - 2)
-        ] if len(th) >= 3 else []
-
-    sh = {d: shingles(t) for d, t in clean.items()}
+    sh = {d: ref.shingle_hashes(t) for d, t in clean.items()}
     bands: dict[tuple[int, str], list[int]] = {}
     for d, s in sh.items():
         if not s:
             continue
-        sig = [min((a * h + b) % MINHASH_P for h in s) for a, b in MINHASH_SEEDS[:N_MINHASH]]
-        for bi in range(N_BANDS):
-            key = f"{sig[2 * bi]}|{sig[2 * bi + 1]}"
+        for bi, key in enumerate(ref.band_keys(ref.minhash_signature(s))):
             bands.setdefault((bi, key), []).append(d)
     cand = set()
     for members in bands.values():
@@ -719,15 +665,6 @@ def test_dedup_survivors_matches_python_pipeline(spark, sf_dir):
 
     import pandas as pd
 
-    from movies_etl_spark.operators.dedup import (
-        MINHASH_P,
-        MINHASH_SEEDS,
-        N_BANDS,
-        N_MINHASH,
-        SHINGLE_C1,
-        SHINGLE_C2,
-    )
-
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
     corpus = {int(r.doc_id): r.text for r in docs.itertuples()}
     for r in docs.itertuples():
@@ -735,24 +672,13 @@ def test_dedup_survivors_matches_python_pipeline(spark, sf_dir):
         if int(r.doc_id) % 50 == 0 and len(toks) >= 20:
             corpus[int(r.doc_id) + 1000000] = " ".join(toks[: len(toks) - 10])
 
-    def shingles(text):
-        th = [
-            int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % MINHASH_P
-            for t in text.split(" ")
-        ]
-        return [
-            (th[i] * SHINGLE_C1 + th[i + 1] * SHINGLE_C2 + th[i + 2]) % MINHASH_P
-            for i in range(len(th) - 2)
-        ] if len(th) >= 3 else []
-
-    sh = {d: shingles(t) for d, t in corpus.items()}
+    sh = {d: ref.shingle_hashes(t) for d, t in corpus.items()}
     bands: dict[tuple[int, str], list[int]] = {}
     for d, s in sh.items():
         if not s:
             continue
-        sig = [min((a * h + b) % MINHASH_P for h in s) for a, b in MINHASH_SEEDS[:N_MINHASH]]
-        for bi in range(N_BANDS):
-            bands.setdefault((bi, f"{sig[2 * bi]}|{sig[2 * bi + 1]}"), []).append(d)
+        for bi, key in enumerate(ref.band_keys(ref.minhash_signature(s))):
+            bands.setdefault((bi, key), []).append(d)
     cand = set()
     for members in bands.values():
         cand.update(itertools.combinations(sorted(members), 2))
@@ -1466,33 +1392,12 @@ def test_embedding_dim_stats_match_python_fold(spark, sf_dir):
 def test_ngram_jaccard_matches_python_sets(spark, sf_dir):
     """Blocked n-gram Jaccard recomputed with python set arithmetic over
     brute-forced (lang, n_chars) blocks."""
-    import hashlib
-
     import pandas as pd
-
-    from movies_etl_spark.operators.dedup import (
-        MINHASH_P,
-        SHINGLE_C1,
-        SHINGLE_C2,
-    )
 
     d = pd.read_parquet(
         f"{sf_dir}/documents.parquet", columns=["doc_id", "lang", "n_chars", "text"]
     )
-
-    def shingles(text):
-        th = [
-            int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % MINHASH_P
-            for t in text.split(" ")
-        ]
-        if len(th) < 3:
-            return set()
-        return {
-            (th[i] * SHINGLE_C1 + th[i + 1] * SHINGLE_C2 + th[i + 2]) % MINHASH_P
-            for i in range(len(th) - 2)
-        }
-
-    sh = {int(r.doc_id): shingles(r.text) for r in d.itertuples()}
+    sh = {int(r.doc_id): set(ref.shingle_hashes(r.text)) for r in d.itertuples()}
     want = {}
     for (_, _), grp in d.groupby(["lang", "n_chars"]):
         ids = sorted(int(x) for x in grp.doc_id)
@@ -1607,8 +1512,6 @@ def test_simhash_pairs_match_bruteforce_hamming(spark, sf_dir):
     formulations must produce the identical pair set. A banding bug that
     silently dropped reachable pairs would be invisible to the replay
     oracle and caught here."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
@@ -1619,11 +1522,8 @@ def test_simhash_pairs_match_bruteforce_hamming(spark, sf_dir):
         if int(r.doc_id) % 50 == 0 and len(toks) >= 20:
             corpus[int(r.doc_id) + 1000000] = " ".join(toks[: len(toks) - 10])
 
-    def tok_hash(t):
-        return int(hashlib.md5(t.encode()).hexdigest()[:12], 16)
-
     def simhash16(text):
-        hs = [tok_hash(t) for t in text.split(" ")]
+        hs = [ref.token_hash(t) for t in text.split(" ")]
         out = 0
         for j in range(16):
             s = sum(((h >> j) & 1) * 2 - 1 for h in hs)
@@ -2201,14 +2101,6 @@ def test_llm_corpus_pipeline_matches_independent_python(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from movies_etl_spark.operators.dedup import (
-        MINHASH_P,
-        MINHASH_SEEDS,
-        N_BANDS,
-        N_MINHASH,
-        SHINGLE_C1,
-        SHINGLE_C2,
-    )
     from movies_etl_spark.plans.queries_scale import SEMDEDUP_TAU
 
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
@@ -2251,32 +2143,13 @@ def test_llm_corpus_pipeline_matches_independent_python(spark, sf_dir):
     assert any(d >= 2000000 for d in exact_casualties), "exact stage vacuous"
 
     # 3. MinHash-LSH near-dedup: drop the larger id of each verified pair
-    def shingles(text):
-        th = [
-            int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % MINHASH_P
-            for t in text.split(" ")
-        ]
-        return (
-            [
-                (th[i] * SHINGLE_C1 + th[i + 1] * SHINGLE_C2 + th[i + 2])
-                % MINHASH_P
-                for i in range(len(th) - 2)
-            ]
-            if len(th) >= 3
-            else []
-        )
-
-    sh = {d: shingles(t) for d, t in ex.items()}
+    sh = {d: ref.shingle_hashes(t) for d, t in ex.items()}
     bands: dict = {}
     for d, s in sh.items():
         if not s:
             continue
-        sig = [
-            min((a * h + b) % MINHASH_P for h in s)
-            for a, b in MINHASH_SEEDS[:N_MINHASH]
-        ]
-        for bi in range(N_BANDS):
-            bands.setdefault((bi, f"{sig[2 * bi]}|{sig[2 * bi + 1]}"), []).append(d)
+        for bi, key in enumerate(ref.band_keys(ref.minhash_signature(s))):
+            bands.setdefault((bi, key), []).append(d)
     mh_drops = set()
     for members in bands.values():
         for a, b in itertools.combinations(sorted(members), 2):

@@ -842,19 +842,18 @@ def test_reference_scale_skew_join_plan(spark):
 def test_minhash_guard_plan(spark, sf_dir):
     """The batch candidate path must be the FUSED CAPPED single-shuffle
     form (r9): ONE exchange on the band key feeding a row_number cap
-    window (the spillable pre-aggregation truncation ADVICE r8 asked
-    for) whose partitioning the collect_list+count ObjectHashAggregate
-    REUSES (partial+final with no second band exchange), the bucket
-    guard's raise_error in a Filter over the post-cap count, pairs
-    emitted by map-side explodes, and exactly one more exchange for the
-    final distinct. Exactly ONE Window node — the cap; a second would
-    mean the old standalone window guard got stacked on top — and NO
-    join at all (the r7 self-join + broadcast-probe shape paid two
-    extra exchanges over a persisted band table — the de-opt this pin
-    exists to catch; tools/proto_fused.py keeps both retired arms
-    frozen for re-measurement). The incremental/streaming paths keep
-    the standalone window guard by design (small delta-touched subset,
-    single lineage eval)."""
+    window (the spillable pre-aggregation truncation ADVICE r8 asked for)
+    whose partitioning the collect_list+count ObjectHashAggregate REUSES
+    (partial+final with no second band exchange), the bucket guard's
+    raise_error in a Filter over the post-cap count, pairs emitted by
+    map-side explodes, and exactly one more exchange for the final
+    distinct. Exactly ONE Window node — the cap; a second would mean the
+    old standalone window guard got stacked on top — and NO join at all
+    (the r7 self-join + broadcast-probe shape paid two extra exchanges
+    over a persisted band table — the de-opt this pin exists to catch;
+    NOTES_r9.md records the three-arm A/B). The incremental/streaming
+    paths keep the standalone window guard by design (small
+    delta-touched subset, single lineage eval)."""
     from movies_etl_spark.operators import dedup as D
     from movies_etl_spark.sources import readers
 

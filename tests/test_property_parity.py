@@ -766,7 +766,7 @@ def test_ann_rerank_containment_and_scorer_parity(spark, sf_dir):
     fold = {
         (r["query_id"], r["neighbor_id"]): r["c"]
         for r in pair_df.select(
-            "query_id", "neighbor_id", F.round(cosine(F.col("a"), F.col("b")), 6).alias("c")
+            "query_id", "neighbor_id", F.round(cosine("a", "b"), 6).alias("c")
         ).collect()
     }
     for r in out.itertuples():
@@ -1418,10 +1418,10 @@ def test_cms_join_fused_identity_degenerate_inputs(spark, tmp_path):
 
 
 def test_cms_join_fused_matches_per_relation_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted fusion (the same contract
-    tools/ab_cms_fused.py asserts at sf0.1, pinned here at the test
-    SF so a regression cannot hide between A/B runs): both variants of
-    cms_join_size_estimate return the identical single row."""
+    """Gate-flip identity for the adopted fusion (the contract its A/B
+    asserted at sf0.1, NOTES_r14, pinned here at the test SF): both
+    variants of cms_join_size_estimate return the identical single
+    row."""
     from movies_etl_spark.plans import queries_scale as QS
     from movies_etl_spark.plans import registry
 
@@ -1455,7 +1455,7 @@ def test_with_minhash_bands_sig_cols_matches_refold(spark):
         ).alias("text"),
     )
     sh = D.shingled(docs, "text", "doc_id")
-    sig = D.minhash_signature(F.col("shingles"))
+    sig = D.minhash_signature("shingles")
     m_cols = [f"m{i}" for i in range(D.N_MINHASH)]
     sh_sig = sh.select(
         "doc_id", "shingles", *[s.alias(c) for s, c in zip(sig, m_cols)]
@@ -1474,8 +1474,8 @@ def test_with_minhash_bands_sig_cols_matches_refold(spark):
 
 def test_minhash_estimate_shared_sig_matches_refold_variant(spark, sf_dir):
     """Gate-flip identity for the adopted shared-signature form (the
-    same contract tools/ab_minhash_sig.py asserts at sf0.1, pinned
-    here at the test SF)."""
+    contract its A/B asserted at sf0.1, NOTES_r14, pinned here at the
+    test SF)."""
     from movies_etl_spark.plans import queries_ext as QE
     from movies_etl_spark.plans import registry
 
@@ -1492,9 +1492,9 @@ def test_minhash_estimate_shared_sig_matches_refold_variant(spark, sf_dir):
 
 
 def test_funnel_one_pass_matches_per_stage_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted one-pass funnel (the same
-    contract tools/ab_funnel_onepass.py asserts at sf0.1, pinned here
-    at the test SF): both variants return identical stage counts."""
+    """Gate-flip identity for the adopted one-pass funnel (the
+    contract its A/B asserted at sf0.1, NOTES_r14, pinned here at the
+    test SF): both variants return identical stage counts."""
     from movies_etl_spark.plans import queries_analytics as QA
     from movies_etl_spark.plans import registry
 
@@ -1512,8 +1512,8 @@ def test_funnel_one_pass_matches_per_stage_variant(spark, sf_dir):
 
 def test_concurrency_one_scan_matches_union_variant(spark, sf_dir):
     """Gate-flip identity for the r15 one-scan sweep-line endpoints
-    (the same contract tools/ab_concurrency_onescan.py asserts at
-    sf0.1, pinned here at the test SF): the explode form and the
+    (the contract its A/B asserted at sf0.1, NOTES_r15, pinned here
+    at the test SF): the explode form and the
     two-scan union form return identical per-day concurrency rows."""
     from movies_etl_spark.plans import queries_analytics as QA
     from movies_etl_spark.plans import registry
@@ -1532,8 +1532,8 @@ def test_concurrency_one_scan_matches_union_variant(spark, sf_dir):
 
 def test_recall_shared_scan_matches_per_arm_variant(spark, sf_dir):
     """Gate-flip identity for the r15 shared-scan recall audits (the
-    same contract tools/ab_recall_shared.py asserts at sf0.1, pinned
-    here at the test SF): the checkpoint-leaf form and the per-arm
+    contract its A/B asserted at sf0.1, NOTES_r15, pinned here at
+    the test SF): the checkpoint-leaf form and the per-arm
     parquet-scan form return identical per-query recall rows for both
     audits."""
     from movies_etl_spark.plans import queries_ext as QE
@@ -1550,54 +1550,3 @@ def test_recall_shared_scan_matches_per_arm_variant(spark, sf_dir):
         finally:
             QE.RECALL_SHARED_SCAN = saved
         assert base == shared, (name, base, shared)
-
-
-def test_shingle_band_sql_parity(spark):
-    """The r19 single-parse shingle/band builders are value-identical to
-    the python-HOF Column builders they replaced: shingled() vs
-    shingle_hash_array(tokens(col)), and with_minhash_bands' parsed
-    band array vs band_keys(minhash_signature(shingles)) — same md5
-    token hashing, same affine grouping, same concat casts."""
-    from movies_etl_spark.operators import dedup as D
-    from movies_etl_spark.operators.text import tokens
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f g"),
-            (2, "a b"),                      # under-k: empty shingles
-            (3, ""),                         # degenerate
-            (4, "x y z x y z x y z q r s"),
-            (5, "lorem ipsum dolor sit amet consectetur"),
-        ],
-        "doc_id long, text string",
-    )
-    new_sh = D.shingled(docs, "text", "doc_id")
-    old_sh = docs.select(
-        F.col("doc_id"),
-        D.shingle_hash_array(tokens(F.col("text"))).alias("shingles"),
-    )
-    assert new_sh.exceptAll(old_sh).count() == 0
-    assert old_sh.exceptAll(new_sh).count() == 0
-
-    new_bands = D.with_minhash_bands(new_sh, "doc_id")
-    sig = D.minhash_signature(F.col("shingles"))
-    old_banded = old_sh.select(
-        F.col("doc_id"),
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("band_id"), b.alias("band_key"))
-                for i, b in enumerate(D.band_keys(sig))
-            ]
-        ).alias("bands"),
-    )
-    old_bands = (
-        old_banded.select("doc_id", F.explode("bands").alias("b"))
-        .select(
-            "doc_id",
-            F.col("b.band_id").alias("band_id"),
-            F.col("b.band_key").alias("band_key"),
-        )
-        .filter(F.col("band_key") != "")
-    )
-    assert new_bands.exceptAll(old_bands).count() == 0
-    assert old_bands.exceptAll(new_bands).count() == 0

@@ -34,3 +34,65 @@ def test_shared_cli_parser():
         cli.parse_args(["--dry-run=x"], flags, "u")
     with pytest.raises(SystemExit):  # positionals rejected by default
         cli.parse_args(["stray"], flags, "u")
+
+
+def _engine_module(name: str):
+    """The engine module ``name`` names, or None for anything else."""
+    import importlib
+
+    if name == "__spark_entry__" or name.startswith("movies_etl_spark"):
+        return importlib.import_module(name)
+    return None
+
+
+def test_tools_compile_and_resolve_engine_names():
+    """Every tools/*.py byte-compiles, and every engine name it uses
+    exists: each ``from movies_etl_spark… import X`` and each attribute
+    read off a bound engine module (``D.shingled``). A tool that still
+    names a deleted kernel fails here, not at its next manual run."""
+    import ast
+    import glob
+    import os
+
+    tools_dir = os.path.join(os.path.dirname(__file__), "..", "tools")
+    paths = sorted(glob.glob(os.path.join(tools_dir, "*.py")))
+    assert paths
+    missing = []
+    for path in paths:
+        with open(path) as f:
+            src = f.read()
+        compile(src, path, "exec")
+        tree = ast.parse(src, path)
+        bound = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    # ``import a.b as X`` binds a.b; ``import a.b`` binds a
+                    name = a.name if a.asname else a.name.split(".")[0]
+                    mod = _engine_module(name)
+                    if mod is not None:
+                        bound[a.asname or name] = mod
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                mod = _engine_module(node.module)
+                if mod is None:
+                    continue
+                for a in node.names:
+                    if hasattr(mod, a.name):
+                        obj = getattr(mod, a.name)
+                    else:
+                        try:
+                            obj = _engine_module(f"{node.module}.{a.name}")
+                        except ImportError:
+                            missing.append(f"{path}: {node.module}.{a.name}")
+                            continue
+                    if isinstance(obj, type(os)):
+                        bound[a.asname or a.name] = obj
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in bound
+                and not hasattr(bound[node.value.id], node.attr)
+            ):
+                missing.append(f"{path}: {node.value.id}.{node.attr}")
+    assert not missing, missing

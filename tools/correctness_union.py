@@ -29,8 +29,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def load_rows() -> dict[str, tuple[int, dict]]:
     latest: dict[str, tuple[int, dict]] = {}
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1))
+        mt = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        rnd = int(mt.group(1))
         for name, row in json.load(open(path)).items():
             if name not in latest or rnd >= latest[name][0]:
                 latest[name] = (rnd, row)
