@@ -9,7 +9,8 @@ Each query also runs inside one `perfbench/tracing.py` span, and its
 record in BENCH_DETAIL.json (`layers`) says where the time went:
 
 - `build_s`: the `fn(spark, sf)` call (py4j + Catalyst analysis, plus
-  any jobs the build itself runs), and `exec_s`: the noop write;
+  any jobs the build itself runs), `build_jobs`: the jobs started inside
+  that call, and `exec_s`: the noop write;
 - the executor counters of every job the query started, read from the
   status store by `tracing.exec_counters`: jobs, stages, tasks, run,
   CPU and GC ms, input, shuffle, spill and output bytes, and the worst
@@ -183,14 +184,14 @@ HEADLINE = [
     "similarity_ann_tuned",
     # r18 addition (VERDICT r17 #3): the over-cap distributed
     # connected-components loop as its own bench row — every other CC
-    # consumer's edge list takes the count-guarded local path, so the
+    # consumer's edge list takes the row-capped local path, so the
     # advertised 100 TB fallback had parity coverage but no wall-time row
     "dedup_cc_distributed",
 ]
 
 #: per-query counters summed into the suite totals
-TOTALS = ("cpu_ms", "input_bytes", "shuffle_read_bytes", "shuffle_write_bytes",
-          "spill_bytes", "output_bytes")
+TOTALS = ("jobs", "build_jobs", "cpu_ms", "input_bytes", "shuffle_read_bytes",
+          "shuffle_write_bytes", "spill_bytes", "output_bytes")
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -245,9 +246,11 @@ def run_suite(spark, names: list[str], sf_dir: str) -> tuple[float, dict[str, di
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 t1 = time.perf_counter()
+                build_hi = tracer.next_job_id()
                 _noop(df)
                 t2 = time.perf_counter()
             rec = {"s": round(t2 - t0, 3), "build_s": round(t1 - t0, 3),
+                   "build_jobs": build_hi - span["job_lo"],
                    "exec_s": round(t2 - t1, 3),
                    "job_lo": span["job_lo"], "job_hi": span["job_hi"]}
             rec.update(tracing.exec_counters(spark, span["job_lo"], span["job_hi"]))
@@ -367,7 +370,7 @@ def main() -> None:
         "n_queries": len(timings),
         "approx_rows_per_sec": round(rows_total / total) if total else None,
         # which connected_components paths the suite exercised (r13:
-        # "local" = count-guarded driver union-find, 0 rounds by
+        # "local" = row-capped driver union-find, 0 rounds by
         # construction; "distributed" = the over-cap label loop — has its
         # own bench row since r18). rounds = max across distributed calls;
         # each layer record's "cc" carries the per-query breakdown.

@@ -32,12 +32,13 @@ ROWS_PER_BAND = N_MINHASH // N_BANDS
 LAST_CC_ROUNDS: int = 0
 
 #: which execution path the most recent connected_components() call
-#: took: "local" (count-guarded driver union-find) or "distributed"
+#: took: "local" (driver union-find under the row cap) or "distributed"
 #: (iterative label propagation).
 LAST_CC_MODE: str = ""
 
 #: Driver-side union-find admission cap for connected_components, in
-#: EDGE ROWS (count-guarded BEFORE the collect). Rows are an honest
+#: EDGE ROWS, enforced by the collect itself: it fetches at most cap + 1
+#: rows, and cap + 1 back means over cap. Rows are an honest
 #: byte proxy here — an edge is two fixed-width ids, no variable-length
 #: payload (unlike the BPE vocab, which gates on characters too) — and
 #: the Python-side structures cost ~150-250 bytes per edge (two tuple
@@ -804,8 +805,9 @@ def connected_components(
     to the curation build side): the VERIFIED edge list is tiny relative
     to the corpus (near-dup pairs survive LSH banding + Jaccard ≥ τ), so
     when it fits ``max_local_edges`` rows the components run as a
-    driver-side union-find over ONE count + ONE collect — the label
-    table that comes back is at most 2·|edges| rows, the same
+    driver-side union-find over ONE bounded collect (at most
+    ``max_local_edges + 1`` rows; the extra row means over cap) — the
+    label table that comes back is at most 2·|edges| rows, the same
     broadcast-size class every consumer's anti-join already assumes.
     This deletes the per-round label shuffle AND the per-round
     convergence action entirely (measured: 27 of curation_pipeline's 28
@@ -826,9 +828,9 @@ def connected_components(
     global LAST_CC_ROUNDS, LAST_CC_MODE
     # The edge lineage is typically the expensive candidate-verify join
     # (LSH band join + Jaccard over shingle arrays) — evaluate it
-    # exactly ONCE: persist, then the guard count() materializes it and
-    # every later access (the local path's collect, or the over-cap
-    # path's localCheckpoint) reads the cache.
+    # exactly ONCE: persist, then the bounded guard collect materializes
+    # the partitions it scans and the over-cap path's localCheckpoint
+    # reads those from the cache.
     # Null endpoints carry no node identity: the distributed loop's
     # label joins would drop them silently while the local union-find
     # would TypeError on None-vs-int comparison (ADVICE r13 #2) — the
@@ -840,8 +842,9 @@ def connected_components(
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .persist()
     )
-    if e0.count() <= max_local_edges:
-        labels = _components_local([(r["u"], r["v"]) for r in e0.collect()])
+    rows = e0.limit(max_local_edges + 1).collect()
+    if len(rows) <= max_local_edges:
+        labels = _components_local([(r["u"], r["v"]) for r in rows])
         e0.unpersist()
         LAST_CC_ROUNDS = 0
         LAST_CC_MODE = "local"

@@ -1310,8 +1310,8 @@ def q_dedup_cluster_components(spark, sf_dir):
     """Dedup cluster resolution: MinHash-LSH verified pairs → connected
     components → canonical cluster id (min member). The oracle computes
     the same components via a recursive transitive closure; the engine
-    runs a count-guarded driver union-find over the verified edge list
-    (tiny relative to the corpus — one count + one collect, r13) with
+    runs a driver union-find over the verified edge list (tiny relative
+    to the corpus — one collect bounded at the row cap + 1, r13) with
     iterative min-label propagation as the over-cap fallback (one
     label-table shuffle per round, 2-3 rounds at near-dup diameters)."""
     return D.connected_components(_verified_near_dup_edges(spark, sf_dir))

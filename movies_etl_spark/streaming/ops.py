@@ -25,6 +25,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movies_etl_spark.sources import readers
+
 #: events parquet schema when ts is TIMESTAMP(NANOS) read with nanosAsLong
 #: (ts = nanos since epoch); the µs encoding instead reads as TIMESTAMP_NTZ
 #: — _events_stream_schema picks per-dataset by peeking at the batch schema
@@ -67,8 +69,9 @@ def _stream_source_dir(sf_dir: str) -> str:
 def _events_ts_is_nanos_long(spark: SparkSession, sf_dir: str) -> bool:
     """True when `events.ts` is TIMESTAMP(NANOS) in parquet (which Spark
     surfaces as a bigint under the nanosAsLong legacy conf). One footer
-    read — no data scan."""
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    read — no data scan — the first time in a session, none after
+    (readers.read_parquet's schema memo)."""
+    batch = readers.read_parquet(spark, f"{sf_dir}/events.parquet")
     return dict(batch.dtypes).get("ts") == "bigint"
 
 
@@ -317,8 +320,6 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     same planting as dedup_exact) is materialized to a scratch ingest
     directory first — the file stream source reads a directory, which is
     also the real shape of an ingest landing zone."""
-    from movies_etl_spark.sources import readers
-
     base = readers.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
@@ -947,8 +948,6 @@ def lsh_dedup_stream(
 
 def _load_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch events load with the same ts normalization as the stream."""
-    from movies_etl_spark.sources import readers
-
     return readers.load_table(spark, sf_dir, "events")
 
 
@@ -1099,7 +1098,6 @@ def incremental_cms_rollup(
     materialized source) against the streamed sketch's estimates,
     exposing the overestimate-only error contract as data."""
     from movies_etl_spark.operators import sketch as SK
-    from movies_etl_spark.sources import readers
 
     d = (
         readers.load_table(spark, sf_dir, "documents")

@@ -14,11 +14,15 @@ def test_suite_records_layer_counters_per_query(spark, sf_dir):
     assert wall >= sum(rec["s"] for rec in layers.values())
     counter_keys = set(tracing.exec_counters(spark, 0, 0))
     for name, rec in layers.items():
-        assert {"build_s", "exec_s"} | counter_keys <= set(rec), name
+        assert {"build_s", "build_jobs", "exec_s"} | counter_keys <= set(rec), name
         assert rec["jobs"] > 0 and rec["cpu_ms"] > 0, name
+        assert 0 <= rec["build_jobs"] <= rec["jobs"], name
     batch, stream = layers["groupby_count"], layers["streaming_dedup"]
     # each query owns its own job-id range
     assert batch["job_hi"] <= stream["job_lo"]
     assert batch["jobs"] == batch["job_hi"] - batch["job_lo"]
     assert stream["batches"] > 0
+    # the stream runs inside the build call, so its batches' jobs are
+    # build jobs
+    assert stream["build_jobs"] > 0
     assert "batches" not in batch

@@ -247,14 +247,15 @@ def test_connected_components_empty_edges_exits_first_round(spark):
     )
 
 
-def test_connected_components_local_distributed_parity(spark):
+def test_connected_components_local_distributed_parity(spark, monkeypatch):
     """r13 execution split (the r12 BPE playbook applied to the curation
-    build side): the count-guarded driver union-find and the over-cap
+    build side): the row-capped driver union-find and the over-cap
     distributed label-propagation loop must return IDENTICAL labels.
     Asserted on a seeded random multigraph (dense enough that the
     distributed loop needs many propagation rounds) plus the adversarial
     shapes: a self-loop singleton, a diameter-3 chain, and duplicate /
-    reversed edges."""
+    reversed edges. The local path decides admission with its one
+    bounded collect: it never counts the edges first."""
     import random
 
     from movies_etl_spark.operators import dedup as D
@@ -264,11 +265,18 @@ def test_connected_components_local_distributed_parity(spark):
     edges += [(100, 100), (200, 201), (201, 202), (202, 203), (201, 200)]
     df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
 
+    counts = []
+    count = type(df).count
+    monkeypatch.setattr(
+        type(df), "count", lambda self: counts.append(self) or count(self)
+    )
     loc = {
         (r["node"], r["component"])
         for r in D.connected_components(df).collect()
     }
+    monkeypatch.undo()
     assert D.LAST_CC_MODE == "local" and D.LAST_CC_ROUNDS == 0
+    assert counts == []
     dist = {
         (r["node"], r["component"])
         for r in D.connected_components(df, max_local_edges=0).collect()
