@@ -15,6 +15,9 @@ record in BENCH_DETAIL.json (`layers`) says where the time went:
   status store by `tracing.exec_counters`: jobs, stages, tasks, run,
   CPU and GC ms, input, shuffle, spill and output bytes, and the worst
   stage's max task over median task run time;
+- `codegen_compiles` and `codegen_ms`: the generated classes Janino
+  compiled while the query ran and the time it took, which is 0 for a
+  query whose classes are all in the session's codegen cache;
 - for streaming queries, `batches` and `jobs_per_batch`;
 - for connected-components consumers, `cc` (path and rounds).
 
@@ -190,8 +193,9 @@ HEADLINE = [
 ]
 
 #: per-query counters summed into the suite totals
-TOTALS = ("jobs", "build_jobs", "cpu_ms", "input_bytes", "shuffle_read_bytes",
-          "shuffle_write_bytes", "spill_bytes", "output_bytes")
+TOTALS = ("jobs", "build_jobs", "codegen_compiles", "cpu_ms", "input_bytes",
+          "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
+          "output_bytes")
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -211,6 +215,17 @@ def _queries() -> dict:
 
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def codegen_counters(spark) -> tuple[int, int]:
+    """(classes compiled, compile nanoseconds) so far in the JVM. The
+    count is that of Spark's CodegenMetrics compilation-time histogram;
+    the time is CodeGenerator's exact running sum of the same durations
+    (the histogram keeps only a sample of them)."""
+    jvm = spark._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return hist.getCount(), ns
 
 
 def run_suite(spark, names: list[str], sf_dir: str) -> tuple[float, dict[str, dict]]:
@@ -242,6 +257,7 @@ def run_suite(spark, names: list[str], sf_dir: str) -> tuple[float, dict[str, di
             # but outside per-query timings, so per-query numbers are
             # comparable regardless of suite composition.
             spark._jvm.System.gc()
+            compiles0, compile_ns0 = codegen_counters(spark)
             with tracer.span(name, "query") as span:
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
@@ -249,9 +265,12 @@ def run_suite(spark, names: list[str], sf_dir: str) -> tuple[float, dict[str, di
                 build_hi = tracer.next_job_id()
                 _noop(df)
                 t2 = time.perf_counter()
+            compiles1, compile_ns1 = codegen_counters(spark)
             rec = {"s": round(t2 - t0, 3), "build_s": round(t1 - t0, 3),
                    "build_jobs": build_hi - span["job_lo"],
                    "exec_s": round(t2 - t1, 3),
+                   "codegen_compiles": compiles1 - compiles0,
+                   "codegen_ms": round((compile_ns1 - compile_ns0) / 1e6, 1),
                    "job_lo": span["job_lo"], "job_hi": span["job_hi"]}
             rec.update(tracing.exec_counters(spark, span["job_lo"], span["job_hi"]))
             rec["cpu_ms"] = round(rec["cpu_ms"], 1)
@@ -388,6 +407,11 @@ def main() -> None:
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": spark.conf.get(
             "spark.sql.shuffle.partitions", None
+        ),
+        # the generated-class cache size the session runs with: at
+        # Spark's default of 100 every query of the suite recompiles
+        "codegen_cache_entries": spark.conf.get(
+            "spark.sql.codegen.cache.maxEntries"
         ),
     }
     # Per-query detail goes to a committed file; stdout gets a COMPACT

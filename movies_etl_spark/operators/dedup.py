@@ -783,13 +783,6 @@ def _components_local(
     return sorted((x, find(x)) for x in parent)
 
 
-#: Distributed-CC convergence-check cadence (r19): the monotone
-#: convergence aggregate is exact at ANY inspection round, so checking
-#: every 2nd round halves the per-round action overhead for ≤1 extra
-#: no-op round on odd-round convergence. 1 restores check-every-round.
-CC_CHECK_EVERY = 2
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -944,41 +937,31 @@ def connected_components(
                 F.col("_old"),
             )
         )
-        # Lazy localCheckpoint: the convergence aggregate below is the one
-        # action per checked round — it materializes the checkpoint AND
-        # answers convergence (min-label propagation is monotone, so
-        # counting component < _old is exact). After it, this round's
-        # frame is an RDD leaf: next round's plan is constant-size
-        # instead of embedding every earlier round (see the `both`
-        # comment) — the plan stays leaf-truncated even on UNCHECKED
-        # rounds, because the lazy checkpoint wraps the round in a
-        # LogicalRDD at construction; only the RDD's materialization
-        # waits for the next action. Superseded rounds' blocks are
-        # released by the ContextCleaner when the frame is dropped; each
-        # is a 3-column label table, the same footprint class the old
-        # explicit persist/unpersist managed.
+        # Lazy localCheckpoint: the convergence aggregate below is the
+        # round's one action. It materializes the checkpoint on this
+        # thread AND answers convergence (min-label propagation is
+        # monotone, so counting component < _old is exact). After it,
+        # this round's frame is an RDD leaf: next round's plan is
+        # constant-size instead of embedding every earlier round (see
+        # the `both` comment). Every round is checked so that no lazy
+        # checkpoint outlives its round: one left for the next round's
+        # AQE jobs to materialize is marked from a broadcast-exchange
+        # thread while the scheduler submits shuffle stages over the same
+        # RDD, and Spark takes the two locks involved in opposite orders
+        # there (a deadlock seen once with a check every 2nd round: a
+        # broadcast thread in RDD.markCheckpointed, the
+        # dag-scheduler-event-loop in DAGScheduler.getCacheLocs).
+        # Superseded rounds' blocks are released by the ContextCleaner
+        # when the frame is dropped; each is a 3-column label table.
         new_labels = new_labels.localCheckpoint(eager=False)
-        # Convergence check BATCHED every CC_CHECK_EVERY rounds (r19,
-        # VERDICT r18 #7): the check is exact either way — monotone
-        # descent means changed==0 at round k certifies the fixpoint
-        # regardless of which earlier rounds were inspected; skipping
-        # intermediate checks at worst runs CC_CHECK_EVERY-1 extra
-        # (no-op) rounds before detecting, and saves each skipped
-        # round's action round-trip + label-table scan. The final
-        # allowed round is always checked so the fail-loud
-        # non-convergence contract below keeps its exactness.
-        if rounds % CC_CHECK_EVERY == 0 or rounds == max_iter:
-            # coalesce: F.sum over an EMPTY labels frame (no edges) is
-            # NULL — without it `changed == 0` never holds and the loop
-            # runs max_iter
-            changed = new_labels.agg(
-                F.coalesce(
-                    F.sum((F.col("component") < F.col("_old")).cast("long")),
-                    F.lit(0),
-                ).alias("c")
-            ).collect()[0]["c"]
-        else:
-            changed = None  # not inspected this round
+        # coalesce: F.sum over an EMPTY labels frame (no edges) is NULL —
+        # without it `changed == 0` never holds and the loop runs max_iter
+        changed = new_labels.agg(
+            F.coalesce(
+                F.sum((F.col("component") < F.col("_old")).cast("long")),
+                F.lit(0),
+            ).alias("c")
+        ).collect()[0]["c"]
         # next round reads the checkpointed frame through a 2-column
         # projection
         labels = new_labels.select("node", "component")

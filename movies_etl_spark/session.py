@@ -22,6 +22,17 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: Entries in Spark's generated-class cache (static conf
+#: ``spark.sql.codegen.cache.maxEntries``, Spark default 100). One pass of
+#: bench.HEADLINE's 96 queries at sf0.01 compiles ~1,720 distinct classes
+#: and one perfbench ``batch_queries`` pass ~160, so at the default every
+#: repeated query recompiles its classes with Janino (1.4-1.8 s of a
+#: ``batch_queries`` pass, plus the JIT work on the reloaded classes).
+#: Guava evicts per segment, not globally, so the size leaves more than
+#: 2x headroom over the suite. Keeping every class of the suite costs
+#: ~13 MB of driver metaspace (213 vs 200 MB after two suite passes).
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 @contextlib.contextmanager
 def temp_confs(spark: SparkSession, confs: dict[str, str]):
@@ -114,7 +125,9 @@ def get_spark(
 
     Safe to call when a session already exists (e.g. under the driver
     harness): ``getOrCreate`` reuses it, and :func:`pin_session_conf`
-    re-asserts the runtime-settable confs the engine relies on.
+    re-asserts the runtime-settable confs the engine relies on. Static
+    confs such as the codegen cache size only take effect in a session
+    this call starts.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -142,6 +155,7 @@ def get_spark(
         # write-heavy queries locally, and strictly fewer bytes at scale.
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if extra_conf:
@@ -158,7 +172,9 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
 
     The driver harness hands us its own SparkSession; these settings are
     the ones correctness depends on (UTC timestamps for oracle parity,
-    AQE for sane local plans). All are runtime-settable.
+    AQE for sane local plans). All are runtime-settable. Static confs
+    (the codegen cache size of :func:`get_spark`) cannot change after the
+    session starts, so an external session keeps its own.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

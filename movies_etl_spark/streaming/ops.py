@@ -20,11 +20,11 @@ from __future__ import annotations
 import hashlib
 import os
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movies_etl_spark.session import temp_confs
 from movies_etl_spark.sources import readers
 
 #: events parquet schema when ts is TIMESTAMP(NANOS) read with nanosAsLong
@@ -91,25 +91,16 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int):
-    """Scope the state-store partition count for one stateful stream.
-
-    Stateful streaming operators read ``spark.sql.shuffle.partitions``
-    at FIRST start as the state partition count (then it's fixed into
-    the checkpoint) — it is a per-query sizing knob, not a session
-    property. Each state partition costs store instances + checkpoint
-    files + a task per micro-batch, so over-provisioning dominates small
-    runs: the stream-stream join carries FOUR stores per partition per
-    side, and 32 partitions cost ~24 s on the bounded test input vs ~3 s
-    at a right-sized count, identical results. Production unbounded runs
-    size this to ~2× cores before the first start."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+#: Scoped around each bounded stateful stream. Stateful operators read
+#: ``spark.sql.shuffle.partitions`` at FIRST start as their state
+#: partition count (then it is fixed into the checkpoint), so it is a
+#: per-query sizing knob, not a session property. Each state partition
+#: costs store instances, checkpoint files and a task per micro-batch:
+#: the stream-stream join carries FOUR stores per partition per side, and
+#: 32 partitions cost ~24 s on the bounded test input vs ~3 s at 8,
+#: identical results. Production unbounded runs size this to ~2x cores
+#: before the first start.
+_STATE_PARTITIONS = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _run_to_memory(agg: DataFrame, output_mode: str) -> DataFrame:
@@ -228,7 +219,6 @@ def sessionize(
     )
     sessions = sessionize_stateful(ev)
     from movies_etl_spark.functions import expr as E
-    from movies_etl_spark.session import temp_confs
 
     def finish(out: DataFrame) -> DataFrame:
         return out.select(
@@ -343,7 +333,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["text_hash"])
     )
-    with _state_partitions(spark, 8):
+    with temp_confs(spark, _STATE_PARTITIONS):
         return _run_to_memory(deduped, "append")
 
 
@@ -391,7 +381,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("lag_sec"),
     )
-    with _state_partitions(spark, 8):
+    with temp_confs(spark, _STATE_PARTITIONS):
         return _run_to_memory(joined, "append")
 
 
@@ -487,7 +477,7 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     dups = ev.filter(F.col("event_id") % 100 == 0)
     deduped = dedup_within_watermark(ev.unionByName(dups), ["event_id"], "s")
-    with _state_partitions(spark, 8):
+    with temp_confs(spark, _STATE_PARTITIONS):
         return _run_to_memory(deduped, "append")
 
 
@@ -592,8 +582,6 @@ def _tiny_merge_confs(spark: SparkSession):
     twin: 4 → 2 jobs/batch, values bit-identical). AQE off + a narrow
     shuffle for the duration of the merge only; the streaming query
     itself is planned outside the block."""
-    from movies_etl_spark.session import temp_confs
-
     return temp_confs(
         spark,
         {
@@ -885,6 +873,14 @@ def lsh_dedup_stream(
     candidates apply the same smaller-id rule. The chunk-writing global
     sort below is TEST SCAFFOLDING (building an ordered landing zone),
     not part of the operator.
+
+    Failure contract: a band-bucket guard trip (``max_bucket_rows``)
+    fails batch N AFTER its bands and shingles are in the index and
+    BEFORE any of its survivors are written. Retrying the same batch id
+    (or restarting from the checkpoint) is safe: the retry overwrites
+    the same ``batch=N`` dirs. Catching the error and skipping the batch
+    is NOT: later batches then dedup against batch N's documents, which
+    were never emitted, and drop their near-duplicates with them.
 
     Returns the survivor set (doc_id) read back from the sink."""
     import glob as globmod

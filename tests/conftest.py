@@ -31,6 +31,23 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
+def perfbench_workloads():
+    """perfbench/run.py's QUERY_WORKLOADS, read from the source: importing
+    run.py would put perfbench/ on sys.path for the rest of the test
+    session."""
+    import ast
+
+    run_py = os.path.join(os.path.dirname(__file__), "..", "perfbench", "run.py")
+    with open(run_py) as f:
+        tree = ast.parse(f.read(), run_py)
+    return next(
+        ast.literal_eval(node.value) for node in tree.body
+        if isinstance(node, ast.Assign)
+        and [t.id for t in node.targets if isinstance(t, ast.Name)] == ["QUERY_WORKLOADS"]
+    )
+
+
+@pytest.fixture(scope="session")
 def duck(sf_dir):
     """DuckDB connection with the driver's pre-registered views."""
     import duckdb

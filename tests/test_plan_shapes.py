@@ -272,6 +272,40 @@ def test_connected_components_lineage_truncated(spark, sf_dir):
     assert len(dplan) < 20_000, f"plan blew up to {len(dplan)} chars"
 
 
+def test_connected_components_materializes_each_round_checkpoint(
+    spark, sf_dir, monkeypatch
+):
+    """Each distributed round's lazy localCheckpoint is materialized by
+    that round's own convergence aggregate, before the next round starts
+    any job. A lazy checkpoint left for the next round's AQE jobs is
+    marked from a broadcast-exchange thread while the scheduler submits
+    shuffle stages over the same RDD, which can deadlock in Spark."""
+    from movies_etl_spark.operators import dedup as D
+    from movies_etl_spark.plans.queries_ext import _verified_near_dup_edges
+
+    edges = _verified_near_dup_edges(spark, sf_dir)
+    lazy, unmarked = [], []
+    checkpoint = type(edges).localCheckpoint
+
+    def recording(self, eager=True, *args, **kwargs):
+        # the next round's jobs run inside this call (AQE executes the
+        # round's plan to build the checkpointed RDD): every earlier
+        # lazy checkpoint must be materialized by now
+        unmarked.extend(r for r in lazy if not r.isCheckpointed())
+        out = checkpoint(self, eager, *args, **kwargs)
+        if not eager:
+            lazy.append(out._jdf.queryExecution().analyzed().rdd())
+        return out
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", recording)
+    D.connected_components(edges, max_local_edges=0)
+    monkeypatch.undo()
+    assert D.LAST_CC_MODE == "distributed"
+    assert len(lazy) == D.LAST_CC_ROUNDS > 1
+    assert not unmarked
+    assert all(r.isCheckpointed() for r in lazy)
+
+
 def test_weighted_sample_uses_take_ordered(spark, sf_dir):
     """A-ES weighted sampling must be a pure map + TakeOrdered top-k
     (per-partition heap), never a global Sort — that is the property

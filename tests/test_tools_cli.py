@@ -109,14 +109,13 @@ def test_tools_compile_and_resolve_engine_names():
     assert not missing, missing
 
 
-def test_benchmark_engine_names_resolve():
+def test_benchmark_engine_names_resolve(perfbench_workloads):
     """The engine names the benchmark in perfbench/ relies on exist: the
     functions perfbench/tracing.py wraps as layers, every engine name
     perfbench/run.py reads, and every query its workloads run (with the
     oracle its check compares against). A rename in the engine fails
     here instead of silently dropping a traced layer or failing a
     workload at benchmark time."""
-    import ast
     import importlib
     import os
 
@@ -135,18 +134,9 @@ def test_benchmark_engine_names_resolve():
         "pipeline.run_pipeline", "sinks.write_parquet",
     } <= resolved
 
-    # QUERY_WORKLOADS is read from the source: importing run.py would put
-    # perfbench/ on sys.path for the rest of the test session
-    with open(run_py) as f:
-        tree = ast.parse(f.read(), run_py)
-    workloads = next(
-        ast.literal_eval(node.value) for node in tree.body
-        if isinstance(node, ast.Assign)
-        and [t.id for t in node.targets if isinstance(t, ast.Name)] == ["QUERY_WORKLOADS"]
-    )
     import __spark_entry__  # noqa: F401  (registers every query)
     from movies_etl_spark.plans import registry
 
-    names = {n for ns in workloads.values() for n in ns}
+    names = {n for ns in perfbench_workloads.values() for n in ns}
     assert names and not names - set(registry.QUERIES), names - set(registry.QUERIES)
     assert not names - set(registry.ORACLES), names - set(registry.ORACLES)
